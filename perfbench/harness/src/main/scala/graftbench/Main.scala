@@ -14,9 +14,13 @@ import org.apache.spark.sql.SparkSession
   *
   * args: --workload W --data DIR --out DIR --seconds S --seed N
   *       --trace 0|1 --warm K --min-passes M --oracle 0|1
+  *       [--warm-data DIR,DIR...] [--graph-data DIR]
   *
   * `--oracle 1` also runs `e1_batch`'s two declared queries after the
-  * timed passes for the twin check.
+  * timed passes for the twin check. `--warm-data` lists the tables of
+  * each warm pass in turn (default `--data`). `--graph-data` then runs
+  * [[GraphIndex]]'s chain once over those tables, traced, so that the
+  * graph and index layers are measured in the same run.
   */
 object Main {
 
@@ -48,22 +52,30 @@ object Main {
     val warm = a("warm").toInt
     val minPasses = a("min-passes").toInt
     val oracle = a("oracle") == "1"
+    val warmData = a.getOrElse("warm-data", dataDir).split(",").toSeq
+    val graphData = a.get("graph-data")
     Files.createDirectories(Paths.get(outDir))
 
+    val rt = ManagementFactory.getRuntimeMXBean
+    def mark(what: String): Unit =
+      System.err.println(f"[perfbench] ${rt.getUptime / 1000.0}%.2f s: $what")
     val cpus = Runtime.getRuntime.availableProcessors()
     val spark = session(cpus, s"$outDir/local")
+    mark("session started")
     val trace = new Trace(traced)
     trace.install(spark)
 
     val w: Workload = workloadName match {
-      case "e1_batch" => new E1Batch(spark, dataDir, outDir, trace, oracle)
+      case "e1_batch" => new E1Batch(spark, dataDir, warmData, outDir, trace, oracle)
       case "serve_explore" => new ServeExplore(spark, dataDir, outDir, trace, seed)
       case "graph_index" => new GraphIndex(spark, dataDir, outDir, trace)
       case other => throw new IllegalArgumentException(s"unknown workload $other")
     }
 
+    mark("workload ready")
     w.setup(warm)
-    val setupS = ManagementFactory.getRuntimeMXBean.getUptime / 1000.0
+    val setupS = rt.getUptime / 1000.0
+    mark("set-up done")
 
     val os = ManagementFactory.getOperatingSystemMXBean
       .asInstanceOf[com.sun.management.OperatingSystemMXBean]
@@ -92,6 +104,14 @@ object Main {
     }
     trace.pass = -2
     w.finish()
+    mark("timed passes done")
+    val chain = graphData.map { d =>
+      trace.pass = GraphIndex.ChainPass
+      val g = new GraphIndex(spark, d, outDir, trace)
+      g.runChain(s"$outDir/graph/chain")
+      mark("graph and index chain done")
+      g
+    }
 
     // live heap: what the program still holds after a full collection
     System.gc(); System.gc()
@@ -107,7 +127,7 @@ object Main {
       val v = med(layers.map(_.getOrElse(k, 0.0)).toSeq)
       // executor CPU arrives in ns; report ms like the other timers
       if (k == "executor.cpu_ns") "executor.cpu_ms" -> v / 1e6 else k -> v
-    }
+    } ++ chain.toSeq.flatMap(_.layers(GraphIndex.ChainPass))
     def num(d: Double): String = if (d.isNaN || d.isInfinite) "0" else f"$d%.6f"
     def obj(kv: Seq[(String, Double)]): String =
       kv.map { case (k, v) => s""""$k": ${num(v)}""" }.mkString("{", ", ", "}")
@@ -118,6 +138,7 @@ object Main {
          |"pass_s": ${passS.map(num).mkString("[", ", ", "]")},
          |"cpu_s": ${cpuS.map(num).mkString("[", ", ", "]")},
          |"layers": ${obj(layerMed.toSeq)},
+         |"graph_chain": ${chain.map(_.oracleJson(s"$outDir/graph/chain")).getOrElse("null")},
          |${w.resultJson}}
          |""".stripMargin
     Files.writeString(Paths.get(s"$outDir/result.json"), json)

@@ -12,25 +12,32 @@ import graft.operators.clustering.GraphBuild
 
 /** `serve_explore`: one closed-loop client clicking through the
   * explorer. Set-up builds and persists the E1 tables once; then the
-  * client alternates the explorer's two reads, node-children and
-  * movie-with-embeddings, with ids drawn from `seed`. A pass is a block
-  * of [[Block]] requests, one of each kind: many small blocks give a
-  * steadier median than a few large ones.
+  * client sends the explorer's two reads, node-children and
+  * movie-with-embeddings, interleaved. A pass is a block of
+  * [[Plan]]`.size` requests with a fixed mix: both kinds alternate, and
+  * the ids come from four lists (leaf and inner nodes, documents with
+  * and without an embedding), each shuffled by `seed` and cycled, so
+  * every block, whatever the seed, asks for the same kinds of answer.
   */
 final class ServeExplore(spark: SparkSession, data: String, out: String,
     trace: Trace, seed: Long) extends Main.Workload {
 
-  val Block = 2
-  val opsPerPass = Block
+  /** One block: (request kind, id list), in the order they are sent.
+    * Two of three node requests hit a leaf and two of three movie
+    * requests a document without an embedding, near the tables' own
+    * shares, so each kind's median lands in its common case.
+    */
+  val Plan: Seq[(String, String)] = Seq(
+    "children" -> "leaf", "movie" -> "bare",
+    "children" -> "inner", "movie" -> "embedded",
+    "children" -> "leaf", "movie" -> "bare")
+  val opsPerPass = Plan.size
   private val graphDir = s"$out/serve/graph"
   private val moviesDir = s"$out/serve/movies"
   private var graph: DataFrame = _
   private var movies: DataFrame = _
-  // request ids: each list in a seed-shuffled order, cycled, so every
-  // run visits the tree's nodes in the same proportions
-  private var nodeIds: Array[Long] = _
-  private var docIds: Array[Long] = _
-  private var sent = 0
+  private var ids: Map[String, Array[Long]] = Map.empty
+  private val next = mutable.Map.empty[String, Int].withDefaultValue(0)
   private val lat = Map("children" -> mutable.ArrayBuffer.empty[Double],
     "movie" -> mutable.ArrayBuffer.empty[Double])
   private val log = new BufferedWriter(new FileWriter(s"$out/responses.jsonl"))
@@ -38,7 +45,6 @@ final class ServeExplore(spark: SparkSession, data: String, out: String,
   def setup(warm: Int): Unit = {
     SparkEntry.clearCaches()
     val scored = Pipeline.e1Scored(spark, data).persist()
-    scored.count()
     val gt = Pipeline.e1FromScored(scored)
     trace.span("sink.write") {
       gt.graph.write.mode("overwrite").partitionBy("depth").parquet(graphDir)
@@ -49,16 +55,31 @@ final class ServeExplore(spark: SparkSession, data: String, out: String,
     SparkEntry.clearCaches()
     graph = spark.read.parquet(graphDir)
     movies = spark.read.parquet(moviesDir)
+    val nodes = graph.select(col("id"), col("children_count") === 0).collect()
+      .map(r => (r.getLong(0), r.getBoolean(1)))
+    val vecs = Tables.embeddings(spark, data).select("vec_id").collect()
+      .map(_.getLong(0)).toSet
+    val docs = Tables.documents(spark, data).select("doc_id").collect().map(_.getLong(0))
     val rnd = new scala.util.Random(seed)
-    nodeIds = rnd.shuffle(graph.select("id").collect().map(_.getLong(0)).sorted.toSeq).toArray
-    docIds = rnd.shuffle(Tables.documents(spark, data).select("doc_id").collect()
-      .map(_.getLong(0)).sorted.toSeq).toArray
-    (0 until warm).foreach(i => block(None))
+    def shuffled(xs: Iterable[Long]): Array[Long] = rnd.shuffle(xs.toSeq.sorted).toArray
+    val lists = Map(
+      "leaf" -> shuffled(nodes.collect { case (i, true) => i }),
+      "inner" -> shuffled(nodes.collect { case (i, false) => i }),
+      "embedded" -> shuffled(docs.filter(vecs)),
+      "bare" -> shuffled(docs.filterNot(vecs)))
+    // small tables can leave a list empty (every sf0.001 document has an
+    // embedding); its requests then take the other list of their kind
+    val other = Map("leaf" -> "inner", "inner" -> "leaf", "embedded" -> "bare",
+      "bare" -> "embedded")
+    ids = lists.map { case (k, xs) => k -> (if (xs.nonEmpty) xs else lists(other(k))) }
+    (0 until warm).foreach(_ => block(None))
   }
 
   private def children(id: Long): String = {
-    val node = graph.filter(col("id") === id)
-      .select("path", "depth", "children_count", "count").collect()
+    val node = trace.span("serve.collect") {
+      graph.filter(col("id") === id)
+        .select("path", "depth", "children_count", "count").collect()
+    }
     val kids = trace.span("GraphBuild.childrenOf") { GraphBuild.childrenOf(graph, id) }
     val (kidRows, movieRows) = trace.span("serve.collect") {
       (kids.collect(), movies.filter(col("graph_id") === id).select("movie_id").collect())
@@ -90,17 +111,13 @@ final class ServeExplore(spark: SparkSession, data: String, out: String,
     s"""{"type": "movie", "id": $id, "rows": ${r.mkString("[", ", ", "]")}}"""
   }
 
-  /** One block: strictly alternating kinds; returns failed requests. */
+  /** One block of [[Plan]]; returns the number of failed requests. */
   private def block(p: Option[Int]): Int = {
     var failed = 0
-    val mine = Map("children" -> mutable.ArrayBuffer.empty[Double],
-      "movie" -> mutable.ArrayBuffer.empty[Double])
-    (0 until Block).foreach { i =>
-      val kind = if (i % 2 == 0) "children" else "movie"
-      val k = sent / 2
-      sent += 1
-      val id = if (kind == "children") nodeIds(k % nodeIds.length)
-        else docIds(k % docIds.length)
+    Plan.foreach { case (kind, list) =>
+      val xs = ids(list)
+      val id = xs(next(list) % xs.length)
+      next(list) += 1
       val t0 = System.nanoTime()
       val resp =
         try Some(if (kind == "children") children(id) else movie(id))
@@ -109,12 +126,11 @@ final class ServeExplore(spark: SparkSession, data: String, out: String,
       val ms = (System.nanoTime() - t0) / 1e6
       resp match {
         case Some(js) =>
-          if (p.isDefined) mine(kind) += ms
+          if (p.isDefined) lat(kind) += ms
           log.write(js); log.newLine()
         case None => failed += 1
       }
     }
-    if (p.isDefined) mine.foreach { case (kind, xs) => lat(kind) ++= xs }
     failed
   }
 
@@ -136,9 +152,9 @@ final class ServeExplore(spark: SparkSession, data: String, out: String,
        |"latency": ${per.mkString("{", ", ", "}")}""".stripMargin
   }
 
-  /** Per request, like the counters (Main divides those by Block). */
+  /** Per request, like the counters (Main divides those by opsPerPass). */
   def passLayers(p: Int): Map[String, Double] =
     if (!trace.on) Map.empty
     else Seq("GraphBuild.childrenOf", "serve.collect")
-      .map(n => s"${n}_ms" -> trace.spanMs(p, n) / Block).toMap
+      .map(n => s"${n}_ms" -> trace.spanMs(p, n) / opsPerPass).toMap
 }

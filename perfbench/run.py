@@ -6,8 +6,9 @@ JSON line as the last line of standard output.
     python3 perfbench/run.py --workload e1_batch --seed 1 --seconds 10 --trace 0
     python3 perfbench/run.py --smoke      # every workload, one pass, all checks
 
-Run it from the root of a checkout. Build outputs, generated inputs and
-run directories go under .bench_build/ there. See perfbench/README.md.
+Run it from the root of a checkout. Build outputs and run directories go
+under .bench_build/ there. The inputs are copies of the engine's test
+tables in perfbench/data/. See perfbench/README.md.
 """
 import argparse
 import hashlib
@@ -24,19 +25,26 @@ HERE = os.path.dirname(os.path.abspath(__file__))
 sys.path.insert(0, HERE)
 
 import checks  # noqa: E402
-import gen  # noqa: E402
 
 ROOT = os.getcwd()
 BUILD = os.path.join(ROOT, ".bench_build")
 HARNESS = os.path.join(HERE, "harness")
+DATA = os.path.join(HERE, "data")
 ENGINE_SRC = os.path.join(ROOT, "src", "main")
 
-# Warm passes (or request blocks) in set-up, and the fewest timed passes.
-# One cold JVM needs about two E1 passes before pass times settle.
+# Per workload: the input scale; the warm passes in set-up, as the scale
+# each one reads (or, for serve_explore, a number of request blocks);
+# the fewest timed passes; and, for e1_batch, the scale at which traced
+# runs also run the graph and index chain once. Smoke runs use sf0.001
+# for everything. A cold JVM's first E1 pass costs about 15 s of class
+# loading, code generation and JIT whatever the input size, so e1_batch
+# pays that on sf0.001. Three E1 passes, or six request blocks, take
+# longer than a 10 s run, so every run times the same number of them.
 WORKLOADS = {
-    "e1_batch": dict(warm=2, min_passes=3, orders=False),
-    "serve_explore": dict(warm=36, min_passes=5, orders=False),
-    "graph_index": dict(warm=1, min_passes=1, orders=True),
+    "e1_batch": dict(scale="sf0.1", warm=["sf0.001"], min_passes=3, chain="sf0.01"),
+    "serve_explore": dict(scale="sf0.1", warm=3, min_passes=6),
+    # by hand and in --smoke only: not a BENCHMARK.json workload (README)
+    "graph_index": dict(scale="sf0.01", warm=[], min_passes=1),
 }
 
 END_TO_END = {"setup_s": "s", "pass_s": "s", "cpu_s": "s", "heap_live_mb": "MB"}
@@ -54,14 +62,10 @@ PER_LAYER = {
     "GraphBuild.build_ms": "ms", "Chunker.windows": "count", "GraphBuild.nodes": "count",
     "GraphBuild.childrenOf_ms": "ms", "serve.collect_ms": "ms",
     "children_p50_ms": "ms", "movie_p50_ms": "ms",
-    "jvm.gc_ms": "ms", "jvm.jit_ms": "ms", "trace.pass_s": "s",
-}
-
-# graph_index only (not a BENCHMARK.json workload; see README)
-GRAPH_LAYERS = {
     "graph.pregel_ms": "ms", "index.build_ms": "ms", "IndexStore.save_ms": "ms",
     "IndexStore.append_ms": "ms", "IndexStore.compact_ms": "ms",
     "IndexStore.read_ms": "ms",
+    "jvm.gc_ms": "ms", "jvm.jit_ms": "ms", "trace.pass_s": "s",
 }
 
 JDK_OPENS = [
@@ -130,18 +134,33 @@ def build():
     return cp
 
 
-def run_jvm(cp, workload, data, run_dir, seconds, seed, trace, warm, min_passes, oracle):
+def inputs(scale):
+    """The test tables at `scale`, after checking them against SHA256SUMS."""
+    with open(os.path.join(DATA, "SHA256SUMS")) as f:
+        sums = dict(reversed(ln.split()) for ln in f if ln.strip())
+    for name, digest in sums.items():
+        if name.startswith(scale + "/"):
+            with open(os.path.join(DATA, name), "rb") as g:
+                if hashlib.sha256(g.read()).hexdigest() != digest:
+                    sys.exit(f"[perfbench] {name} differs from SHA256SUMS")
+    return os.path.join(DATA, scale)
+
+
+def run_jvm(cp, workload, data, warm_data, run_dir, seconds, seed, trace, warm,
+            min_passes, oracle, graph_data=None):
     """Runs graftbench.Main in its own JVM; returns its result dict."""
     tmp = os.path.join(run_dir, "tmp")
     os.makedirs(tmp, exist_ok=True)
     opens = [a for p in JDK_OPENS for a in ("--add-opens", f"java.base/{p}=ALL-UNNAMED")]
     cmd = (["java"] + opens +
-           ["-Xmx3g", "-Duser.timezone=UTC", "-Dspark.ui.enabled=false",
+           ["-Xmx3g", "-XX:+UseParallelGC", "-Duser.timezone=UTC", "-Dspark.ui.enabled=false",
             f"-Djava.io.tmpdir={tmp}", "-cp", cp, "graftbench.Main",
-            "--workload", workload, "--data", data, "--out", run_dir,
+            "--workload", workload, "--data", data, "--warm-data", warm_data,
+            "--out", run_dir,
             "--seconds", str(seconds), "--seed", str(seed), "--trace", str(trace),
             "--warm", str(warm), "--min-passes", str(min_passes),
-            "--oracle", str(int(oracle))])
+            "--oracle", str(int(oracle))] +
+           (["--graph-data", graph_data] if graph_data else []))
     env = {k: v for k, v in os.environ.items()
            if k not in ("SPARK_LOCAL_DIRS", "JAVA_TOOL_OPTIONS", "_JAVA_OPTIONS")}
     with open(os.path.join(run_dir, "jvm.log"), "w") as out:
@@ -162,7 +181,7 @@ def run_jvm(cp, workload, data, run_dir, seconds, seed, trace, warm, min_passes,
         return json.load(f)
 
 
-def metrics_of(res, trace, workload):
+def metrics_of(res, trace):
     if not trace:
         vals = {"setup_s": res["setup_s"], "pass_s": statistics.median(res["pass_s"]),
                 "cpu_s": statistics.median(res["cpu_s"]),
@@ -173,27 +192,26 @@ def metrics_of(res, trace, workload):
     for kind in ("children", "movie"):
         lat = res.get("latency", {}).get(kind)
         layers[f"{kind}_p50_ms"] = lat["p50_ms"] if lat else 0.0
-    names = dict(PER_LAYER)
-    if workload == "graph_index":
-        names.update(GRAPH_LAYERS)
     return {k: {"value": round(float(layers.get(k, 0.0)), 6), "unit": u}
-            for k, u in names.items()}
+            for k, u in PER_LAYER.items()}
 
 
 def run_one(cp, workload, seed, seconds, trace, size="full"):
     cfg = WORKLOADS[workload]
-    data = gen.generate(
-        os.path.join(BUILD, "data", f"{size}-{seed}" + ("-orders" if cfg["orders"] else "")),
-        seed, size, with_orders=cfg["orders"])
+    smoke = size == "smoke"
+    data = inputs("sf0.001" if smoke else cfg["scale"])
+    warm = cfg["warm"]
+    warm_data = ",".join(inputs(s) for s in warm) if isinstance(warm, list) and warm else data
+    n_warm = 0 if smoke else len(warm) if isinstance(warm, list) else warm
+    graph_data = inputs(cfg["chain"]) if trace and not smoke and "chain" in cfg else None
     run_dir = os.path.join(BUILD, "runs", f"{workload}-{seed}-{trace}-{os.getpid()}")
     shutil.rmtree(run_dir, ignore_errors=True)
     os.makedirs(run_dir)
-    smoke = size == "smoke"
     # e1_batch's twin check costs a whole E1 run, so the untraced runs
     # that measure the end-to-end metrics leave it to traced and smoke runs
-    res = run_jvm(cp, workload, data, run_dir, 0 if smoke else seconds, seed, trace,
-                  0 if smoke else cfg["warm"], 1 if smoke else cfg["min_passes"],
-                  oracle=bool(smoke or trace))
+    res = run_jvm(cp, workload, data, warm_data, run_dir, 0 if smoke else seconds, seed,
+                  trace, n_warm, 1 if smoke else cfg["min_passes"],
+                  oracle=bool(smoke or trace), graph_data=graph_data)
     errors = checks.check(workload, res, data)
     for e in errors[:20]:
         log(f"CHECK FAILED: {e}")
@@ -201,7 +219,7 @@ def run_one(cp, workload, seed, seconds, trace, size="full"):
     if res.get("latency"):
         log("latency per request type: " + json.dumps(res["latency"]))
     out = {"correct": not errors, "attempted": res["attempted"], "failed": res["failed"],
-           "metrics": metrics_of(res, trace, workload)}
+           "metrics": metrics_of(res, trace)}
     if trace and os.path.exists(os.path.join(run_dir, "trace.json")):
         os.makedirs(os.path.join(BUILD, "traces"), exist_ok=True)
         shutil.copy(os.path.join(run_dir, "trace.json"),
