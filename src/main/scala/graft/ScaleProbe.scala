@@ -638,7 +638,10 @@ object ScaleProbe {
       TreeOps.fromDendro(Ward.linkage(centers), sizes), maxDepth = 5, maxFanout = 8)
     val rows = TreeOps.flatten(tree)._1
     val wardS = (System.nanoTime() - t0) / 1e9
-    f"""{"n":${sizes.values.sum},"k":${centers.length},"nodes":${rows.size},"scale_sec":$scaleS%.3f,"kmeans_sec":$trainS%.3f,"assign_sec":$assignS%.3f,"ward_sec":$wardS%.3f}"""
+    // fingerprint of the centroid doubles: equal across core counts and
+    // partitionings when the fit is deterministic
+    val centersHash = java.util.Arrays.deepHashCode(centers.asInstanceOf[Array[AnyRef]])
+    f"""{"n":${sizes.values.sum},"k":${centers.length},"nodes":${rows.size},"scale_sec":$scaleS%.3f,"kmeans_sec":$trainS%.3f,"assign_sec":$assignS%.3f,"ward_sec":$wardS%.3f,"centers_hash":"$centersHash%08x"}"""
   }
 
   /** Wall + total shuffle bytes (write/read) of `body`, via a stage

@@ -69,8 +69,9 @@ object AnnIvf {
       s"idCol '$idCol' collides with an internal column name")
     val spark = emb.sparkSession
     import spark.implicits._
-    // persisted: KMeans iterates this frame ~20x, and the inverted-list
-    // join consumes it again — an index build reads the corpus once
+    // persisted: KMeans counts it, gathers its training rows, and the
+    // inverted-list pass consumes it again — an index build reads the
+    // corpus once
     val doubled = emb.select(col(idCol), VectorOps.toDoubleArr(col(arrCol)).as("e"))
       .persist()
     val (_, centers) = trainQuantizer(doubled, idCol, nList)
@@ -89,28 +90,23 @@ object AnnIvf {
     IvfIndex(assigned, cents, idCol)
   }
 
-  /** Coarse-quantizer training, sized to what the quantizer is FOR.
-    * Small corpora (every bench SF) keep the exact historical path —
-    * full-corpus Lloyd via [[GraphBuild.microCluster]], bit-identical
-    * outputs. Past `sampleFloor` rows, training runs on a bounded
-    * DETERMINISTIC sample (hash stride on the id — stable under any
+  /** Coarse-quantizer training, sized to what the quantizer is FOR: a
+    * pure delegate to [[GraphBuild.microCluster]], whose fit runs
+    * in-process over a bounded training set. Up to `sampleFloor` rows
+    * (every bench SF) that set is the whole corpus; past it, a
+    * DETERMINISTIC hash-stride sample on the id (stable under any
     * partitioning) with capped iterations, and only the final
     * assignment pass touches the full corpus: the FAISS convention
     * (~64–256 training points per centroid) because coarse-quantizer
     * quality barely moves recall when nProbe > 1, while full-corpus
-    * Lloyd is the dominant index-build cost at scale. The 100×
-    * rehearsal measured the difference (SCALE.md): full-corpus k=400
-    * training was ~50 s of every index build at 200k vectors; the
-    * sampled path cuts build cost to the one assignment pass + a
-    * bounded train. With [[autoNList]]'s 65536 cap the training set is
-    * bounded at ~4.2M rows regardless of corpus size.
-    *
-    * Since r10 the sampled path lives in [[GraphBuild.microCluster]]
-    * itself (the graph build's O-51 step had the same super-linear
-    * k-transition, VERDICT r9 #4); this is a pure delegate. When the
-    * sample engages (n > 64·nList), microCluster's k formula
-    * min(nList, max(100, n/50)) collapses to exactly nList, so the
-    * delegation is behavior-preserving.
+    * Lloyd was the dominant index-build cost at scale (SCALE.md: ~50 s
+    * of every index build at 200k vectors, k=400). With [[autoNList]]'s
+    * 65536 cap the training set is bounded at ~4.2M rows (~2 GB of
+    * driver doubles at 64 dims) regardless of corpus size; that far out
+    * the one-machine fit is the bottleneck and the hierarchical
+    * quantizer [[autoNList]] describes takes over. When the sample
+    * engages (n > 64·nList), microCluster's k formula
+    * min(nList, max(100, n/50)) collapses to exactly nList.
     */
   private def trainQuantizer(doubled: DataFrame, idCol: String, nList: Int,
       sampleFloor: Long = 50000L): (DataFrame, Array[Array[Double]]) =

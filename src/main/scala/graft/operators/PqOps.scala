@@ -41,46 +41,27 @@ object PqOps {
 
   /** Train the m per-subspace codebooks and encode the corpus.
     *
-    * Training cost is bounded: m KMeans runs at k = 16 over n×dSub
-    * slices of the SAME persisted input (narrow dependency — the corpus
-    * is read once); past `sampleFloor` rows GraphBuild.microCluster
-    * trains each codebook on its deterministic hash-stride sample, so
-    * codebook training is corpus-size-independent while encoding (the
-    * one full pass) is embarrassingly parallel.
+    * Training cost is bounded: ONE gather of the bounded training set
+    * ([[GraphBuild.trainingSet]] at k = 16 and `sampleFloor = 0`, so
+    * every corpus size trains on the same ~64·k-row hash-stride sample —
+    * the FAISS convention; a 16-centroid codebook never needs
+    * full-corpus Lloyd), then m in-process Lloyd fits over its dSub-wide
+    * slices. Encoding, the one full pass, is embarrassingly parallel.
+    * The export-replay oracles are training-independent, so the sample
+    * is a pure cost choice.
     */
   def buildPq(emb: DataFrame, idCol: String, arrCol: String,
       m: Int = 8, k: Int = 16): PqIndex = {
     val doubled = emb.select(col(idCol),
       graft.functions.VectorOps.toDoubleArr(col(arrCol)).as("e")).persist()
-    doubled.count()
-    val dim = doubled.select(size(col("e"))).head().getInt(0)
+    val ts = GraphBuild.trainingSet(doubled, idCol, "e", maxMicro = k, sampleFloor = 0L)
+    val dim = ts.points(0).length
     require(dim % m == 0, s"dim $dim not divisible by m=$m")
     val dSub = dim / m
-    // the m sub-quantizer trainings are INDEPENDENT deterministic jobs
-    // over slices of one persisted frame — submit them concurrently
-    // (Spark schedules concurrent actions from multiple threads) so the
-    // build pays one KMeans wall, not m fixed overheads in sequence
-    // (measured 8.5 s -> ~1.5 s at sf0.1). Results are identical to the
-    // sequential loop: each subspace's training never reads another's.
-    import scala.concurrent.{Await, ExecutionContext, Future}
-    import scala.concurrent.duration.Duration
-    implicit val ec: ExecutionContext = ExecutionContext.global
-    val codebooks: Array[Array[Array[Double]]] = Await.result(
-      Future.sequence((0 until m).toVector.map { j =>
-        Future {
-          val sub = doubled.select(col(idCol),
-            slice(col("e"), j * dSub + 1, dSub).as("sub"))
-          // centers array index == cluster id (microCluster contract).
-          // sampleFloor = 0: codebooks train on the bounded 64·k
-          // hash-stride sample with capped iterations at EVERY corpus
-          // size (the FAISS convention — a 16-centroid codebook never
-          // needs full-corpus Lloyd, and full Lloyd to convergence was
-          // ~7 s of the 8.5 s build at sf0.1). The export-replay oracle
-          // is training-independent, so this is a pure cost choice.
-          GraphBuild.microCluster(sub, idCol, "sub", maxMicro = k,
-            sampleFloor = 0L)._2
-        }
-      }), Duration.Inf).toArray
+    // centers array index == code (the microCluster contract)
+    val codebooks = Array.tabulate(m) { j =>
+      ts.fit(ts.points.map(_.slice(j * dSub, (j + 1) * dSub)))
+    }
     val codes = encode(doubled, idCol, "e", codebooks).persist()
     codes.count()
     doubled.unpersist()

@@ -1,22 +1,25 @@
 package graft.operators.clustering
 
-import org.apache.spark.ml.clustering.KMeans
-import org.apache.spark.ml.functions.array_to_vector
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** End-to-end graph construction (E1 tail, SURVEY.md §3): feature
-  * scaling (O-50) → distributed KMeans micro-clustering (O-51) → driver
-  * Ward over collected centroids (O-52) → rebalance (O-53) → flattened
-  * D6 tables with deterministic ids and materialized paths.
+  * scaling (O-50) → KMeans micro-clustering (O-51: driver-local Lloyd
+  * over a bounded training set, distributed label pass) → driver Ward
+  * over the centroids (O-52) → rebalance (O-53) → flattened D6 tables
+  * with deterministic ids and materialized paths.
   *
   * Scale shape — identical to the reference's own design
-  * (graph_creator.py:179-194): the ONLY driver-side data are the ≤800
-  * micro-cluster centroids (bounded by `maxMicro`, not by input size)
-  * and the per-dim scaling stats (bounded by dimensionality). Membership
-  * never leaves the cluster: the movie→leaf assignment is a broadcast
-  * join of the KMeans label column against the ≤800-row cluster→leaf
-  * map.
+  * (graph_creator.py:179-194): the driver-side data are the KMeans
+  * training set, the ≤800 micro-cluster centroids (bounded by
+  * `maxMicro`, not by input size) and the per-dim scaling stats
+  * (bounded by dimensionality). The training set is at most
+  * `trainTarget × dim` doubles, trainTarget = max(sampleFloor, 64·k):
+  * ≤ 51,200 × 64 ≈ 26 MB at maxMicro = 800, whatever the corpus size.
+  * Membership never leaves the cluster: labels come from one
+  * distributed nearest-centroid pass, and the movie→leaf assignment is
+  * a broadcast join of that label column against the ≤800-row
+  * cluster→leaf map.
   */
 object GraphBuild {
 
@@ -70,83 +73,87 @@ object GraphBuild {
   def scaleFeatures(df: DataFrame, arrCol: String): Column =
     scaleWith(scaleStats(df, arrCol), arrCol)
 
-  /** O-51: k = min(maxMicro, max(100, n/50)) like settings.py:113-121,
-    * clamped to n; seed 42 (graph_creator.py:183). Returns per-row
-    * cluster labels and the k×dim centroid matrix.
-    *
-    * Training is SAMPLE-BOUNDED past `sampleFloor` rows (VERDICT r9 #4 —
-    * the one super-linear 100× row): full-corpus Lloyd is O(n·k·iters)
-    * and the reference's own k formula pushes k to its 800 cap exactly
-    * when n grows, so q_graph_build measured 158× wall at 100× data.
-    * Same seam as the IVF coarse quantizer ([[graft.operators.AnnIvf]]
-    * delegates here): below the floor, the exact historical path —
-    * full-corpus Lloyd, bit-identical outputs at every bench SF. Above
-    * it, Lloyd runs on a deterministic hash-stride sample (~64 training
-    * points per centroid, the FAISS convention; stable under any
-    * partitioning) with capped iterations, and only the final label
-    * assignment touches the full corpus — one O(n·k) pass instead of
-    * ~20. Centroid quality barely moves the downstream Ward tree: the
-    * tree is built over the k centroids, and micro-cluster centroids
-    * from a 50k+-row sample are statistically indistinguishable from
-    * full-corpus ones (ClusteringSpec invariants hold on both paths).
+  /** The bounded training set of [[microCluster]]: the cluster count
+    * `k`, the Lloyd iteration cap, the input coalesced to
+    * data-sized partitions (`sized`, what the label pass scans) and the
+    * gathered training vectors sorted by id (so the fit never depends on
+    * partitioning).
     */
-  def microCluster(features: DataFrame, idCol: String, featCol: String,
-      maxMicro: Int = 800, sampleFloor: Long = 50000L): (DataFrame, Array[Array[Double]]) = {
+  private[graft] final case class TrainingSet(k: Int, maxIter: Int,
+      sized: DataFrame, points: Array[Array[Double]]) {
+    /** Seeded k-means++ + Lloyd over `pts` (default: the gathered rows;
+      * PQ passes per-subspace slices of them). k never exceeds the rows.
+      */
+    def fit(pts: Array[Array[Double]] = points): Array[Array[Double]] =
+      Lloyd.fit(pts, math.max(2, math.min(k, pts.length)), maxIter)
+  }
+
+  /** k = min(maxMicro, max(100, n/50)) like settings.py:113-121, clamped
+    * to n, and ONE Spark job that gathers the training rows to the
+    * driver: all of them up to `trainTarget = max(sampleFloor, 64·k)`,
+    * past that a deterministic xxhash64 stride sample on the id (~64
+    * training points per centroid, the FAISS convention; stable under
+    * any partitioning). The gathered set is bounded by trainTarget×dim
+    * doubles whatever the corpus size.
+    */
+  private[graft] def trainingSet(features: DataFrame, idCol: String, featCol: String,
+      maxMicro: Int, sampleFloor: Long): TrainingSet = {
+    val spark = features.sparkSession
+    import spark.implicits._
     val n = features.count()
     val k = math.max(2, math.min(n, math.min(maxMicro, math.max(100, n / 50))).toInt)
-    // Size partitions to the DATA, not the session default: every Lloyd
-    // iteration schedules one task per partition, so a small feature
-    // frame inheriting a wide parallelism pays ~iterations × partitions
-    // of empty-task overhead (profiling: this was most of the E1 tail at
-    // sf0.1 — 2.7k rows on 32 partitions). ~50k rows/partition keeps a
-    // 100 TB input at thousands of partitions while a thousand-row frame
-    // collapses to a few; coalesce on the (persisted) input is a narrow
-    // dependency, no shuffle.
+    // Size partitions to the DATA, not the session default: the label
+    // pass schedules one task per partition, so a small feature frame
+    // inheriting a wide parallelism pays empty-task overhead. ~50k
+    // rows/partition keeps a 100 TB input at thousands of partitions
+    // while a thousand-row frame collapses to a few; coalesce on the
+    // (persisted) input is a narrow dependency, no shuffle.
     val curParts = features.rdd.getNumPartitions
     val target = math.max(1, math.min(curParts, math.ceil(n / 50000.0).toInt))
     val sized = if (target < curParts) features.coalesce(target) else features
     val trainTarget = math.max(sampleFloor, 64L * k)
+    // ceil: a floor stride can overshoot the target sample by ~2×
+    // (n=200k, target=51.2k: floor gives stride 3 → 66k rows); stride 1
+    // keeps every row
+    val stride = math.max(1L, (n + trainTarget - 1) / trainTarget)
+    val rows = sized.filter(pmod(xxhash64(col(idCol)), lit(stride)) === 0)
+      .select(col(idCol).cast("long"), col(featCol).cast("array<double>"))
+      .as[(Long, Array[Double])].collect()
+    // 20 Lloyd iterations on the full set, 10 on a sample: a coarse
+    // quantizer trained on ~64 points per centroid gains nothing from
+    // more. Sorted by id: the collect order follows the partitioning,
+    // the fit must not.
+    TrainingSet(k, if (stride == 1L) 20 else 10, sized,
+      rows.sortBy(_._1).map(_._2))
+  }
+
+  /** O-51: per-row micro-cluster labels and the k×dim centroid matrix
+    * (array index == cluster id), seed 42 (graph_creator.py:183).
+    *
+    * The fit runs in-process on the driver over the bounded
+    * [[trainingSet]] ([[Lloyd]] — the reference's own one-machine
+    * MiniBatchKMeans design): the training set is gathered in one job,
+    * so a training costs a constant number of Spark jobs, not one per
+    * init step and iteration. Past `sampleFloor` rows it is a hash-stride
+    * sample (VERDICT r9 #4 — full-corpus Lloyd is O(n·k·iters) and the
+    * reference's k formula pushes k to its 800 cap exactly when n grows),
+    * and only the final label assignment touches the full corpus: one
+    * O(n·k) distributed pass. The same seam trains the IVF coarse
+    * quantizer ([[graft.operators.AnnIvf]]) and the PQ codebooks.
+    */
+  def microCluster(features: DataFrame, idCol: String, featCol: String,
+      maxMicro: Int = 800, sampleFloor: Long = 50000L): (DataFrame, Array[Array[Double]]) = {
+    val ts = trainingSet(features, idCol, featCol, maxMicro, sampleFloor)
+    val centers = ts.fit()
     // Final label assignment is the exact nearest-final-centroid rule
     // (AnnIvf.assignNearestArr: Σ(xᵢ−cᵢ)² in index order, strict <,
-    // tie → lowest cluster) rather than KMeansModel.transform — r13,
-    // VERDICT r12 #3, the same graduation the IVF lists made in r12:
-    // MLlib's fastSquaredDistance norm-shortcut is not replayable
-    // outside MLlib, while the exact loop is plain arithmetic any
-    // engine reproduces bit-for-bit from the exported centroid doubles.
-    // Build-time and append-time assignment are now ONE rule everywhere.
-    def exactLabels(model: org.apache.spark.ml.clustering.KMeansModel): DataFrame = {
-      val cents = model.clusterCenters.map(_.toArray).zipWithIndex
-        .map { case (c, i) => (i, c) }
-      graft.operators.AnnIvf.assignNearestArr(sized, idCol, featCol, cents)
-        .select(col(idCol), col("cluster").cast("int").as("cluster"))
-    }
-    if (n <= trainTarget) {
-      val vecs = sized.withColumn("_fv", array_to_vector(col(featCol)))
-      val model = new KMeans().setK(k).setSeed(42)
-        .setFeaturesCol("_fv").setPredictionCol("cluster").fit(vecs)
-      (exactLabels(model), model.clusterCenters.map(_.toArray))
-    } else {
-      // ceil: a floor stride can overshoot the target sample by ~2×
-      // (n=200k, target=51.2k: floor gives stride 3 → 66k rows)
-      val stride = math.max(1L, (n + trainTarget - 1) / trainTarget)
-      val sample = sized
-        .filter(pmod(xxhash64(col(idCol)), lit(stride)) === 0)
-        .withColumn("_fv", array_to_vector(col(featCol)))
-        .persist()
-      // hash stride is approximate; k can never exceed the sample
-      val kk = math.max(2L, math.min(k.toLong, sample.count())).toInt
-      // random init (seeded): kmeans||'s candidate passes cost several
-      // Lloyd iterations at k=800 (measured 100×: more than half the
-      // 57 s train) and buy centroid quality a coarse quantizer doesn't
-      // need — FAISS trains IVF quantizers from a random sample the
-      // same way. Full-probe recall is init-independent by construction
-      // (nProbe == nList scans everything).
-      val model = new KMeans().setK(kk).setSeed(42).setMaxIter(10)
-        .setInitMode("random")
-        .setFeaturesCol("_fv").setPredictionCol("cluster").fit(sample)
-      sample.unpersist()
-      (exactLabels(model), model.clusterCenters.map(_.toArray))
-    }
+    // tie → lowest cluster) — plain arithmetic any engine reproduces
+    // bit-for-bit from the exported centroid doubles (r13, VERDICT r12
+    // #3). Build-time and append-time assignment are ONE rule everywhere.
+    val labels = graft.operators.AnnIvf.assignNearestArr(ts.sized, idCol, featCol,
+        centers.zipWithIndex.map { case (c, i) => (i, c) })
+      .select(col(idCol), col("cluster").cast("int").as("cluster"))
+    (labels, centers)
   }
 
   /** Full build over an (id, ARRAY<FLOAT>) frame → D6 graph + movie
@@ -157,10 +164,10 @@ object GraphBuild {
     val spark = emb.sparkSession
     import spark.implicits._
 
-    // persisted: the input is consumed by the scaling-stats pass and then
-    // by KMeans many times over (count, ~20 Lloyd passes, label
-    // transform) — without this the ENTIRE upstream lineage (for E1:
-    // clean → window → inference → act features) recomputes per pass.
+    // persisted: the input is consumed by the scaling-stats pass, the
+    // scaled frame by KMeans's count, training gather and label pass —
+    // without this the ENTIRE upstream lineage (for E1: clean → window →
+    // inference → act features) recomputes per consumer.
     val input = emb.persist()
     val stats = scaleStats(input, arrCol)
     val scaled = input.select(col(idCol), scaleWith(stats, arrCol).as("scaled"))

@@ -193,7 +193,7 @@ class ClusteringSpec extends SparkSpec {
   test("sampled-train path: complete deterministic labels, k centroids (r10)") {
     // Production only engages the sampled quantizer above 50k rows; a
     // tiny sampleFloor forces it here so the branch has real coverage:
-    // stride sampling, random-init KMeans, full-corpus assignment.
+    // stride sampling, the in-process fit, full-corpus assignment.
     val rnd = new scala.util.Random(7)
     val rows = (0 until 3000).map { i =>
       (i.toLong, Array.fill(4)(((i % 4) * 6.0 + rnd.nextGaussian())))
@@ -214,6 +214,71 @@ class ClusteringSpec extends SparkSpec {
     assert(labels2.orderBy("vec_id").collect().map(_.toSeq).toSeq ==
       collected.map(_.toSeq).toSeq)
     assert(centers2.map(_.toSeq).toSeq == centers.map(_.toSeq).toSeq)
+    // partitioning-independent: the sample is a hash of the id and the
+    // gathered rows are sorted by id before the fit
+    val re = df.repartition(7).persist()
+    val (_, centers7) = GraphBuild.microCluster(re, "vec_id", "scaled",
+      maxMicro = 12, sampleFloor = 500L)
+    assert(centers7.map(_.toSeq).toSeq == centers.map(_.toSeq).toSeq)
+    re.unpersist()
+    df.unpersist()
+  }
+
+  test("degenerate KMeans inputs finish with complete labels") {
+    // all-identical vectors: total k-means++ weight 0, every cluster but
+    // one empty — on both the full and the sampled path
+    val same = (0 until 200).map(i => (i.toLong, Array(1.5, -2.0, 0.25))).toDF("vec_id", "scaled")
+    for ((maxMicro, floor) <- Seq((5, 50000L), (2, 20L))) {
+      val (labels, centers) = GraphBuild.microCluster(same, "vec_id", "scaled",
+        maxMicro = maxMicro, sampleFloor = floor)
+      val ls = labels.collect()
+      assert(ls.length == 200 && ls.forall(_.getAs[Int]("cluster") == 0))
+      assert(centers.nonEmpty && centers.forall(_.toSeq == Seq(1.5, -2.0, 0.25)))
+    }
+    // n == 2: k clamps to 2, each row its own cluster
+    val two = Seq((3L, Array(0.0, 1.0)), (9L, Array(4.0, -1.0))).toDF("vec_id", "scaled")
+    val (labels2, centers2) = GraphBuild.microCluster(two, "vec_id", "scaled")
+    val ls2 = labels2.collect().map(r => r.getAs[Long]("vec_id") -> r.getAs[Int]("cluster")).toMap
+    assert(ls2.keySet == Set(3L, 9L) && ls2.values.toSet.size == 2)
+    assert(centers2.length == 2)
+  }
+
+  test("a KMeans training submits a constant number of Spark jobs") {
+    // the fit runs in-process over one gathered training set: the job
+    // count must not grow with k or with the Lloyd iterations
+    val rnd = new scala.util.Random(3)
+    val df = (0 until 3000).map { i =>
+      (i.toLong, Array.fill(4)(((i % 5) * 4.0 + rnd.nextGaussian())))
+    }.toDF("vec_id", "scaled").persist()
+    df.count()
+    def jobsOf(body: => Unit): Int = {
+      val sentinel = "clustering-spec-job-count-sentinel"
+      val jobs = new java.util.concurrent.atomic.AtomicInteger
+      val done = new java.util.concurrent.CountDownLatch(1)
+      val l = new org.apache.spark.scheduler.SparkListener {
+        override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+          if (Option(e.properties).exists(_.getProperty("spark.job.description") == sentinel))
+            done.countDown()
+          else jobs.incrementAndGet()
+      }
+      spark.sparkContext.addSparkListener(l)
+      try {
+        body
+        // listener events arrive in order: once the sentinel job is
+        // seen, every job `body` submitted has been counted
+        spark.sparkContext.setJobDescription(sentinel)
+        spark.range(1).count()
+        spark.sparkContext.setJobDescription(null)
+        assert(done.await(60, java.util.concurrent.TimeUnit.SECONDS))
+        jobs.get
+      } finally spark.sparkContext.removeSparkListener(l)
+    }
+    val counts = for {
+      (maxMicro, floor) <- Seq((4, 50000L), (40, 50000L), (12, 500L))
+    } yield jobsOf(GraphBuild.microCluster(df, "vec_id", "scaled",
+      maxMicro = maxMicro, sampleFloor = floor))
+    assert(counts.forall(_ <= 3), s"jobs per training: $counts")
+    assert(counts.distinct.size == 1, s"job count varies with k or path: $counts")
     df.unpersist()
   }
 

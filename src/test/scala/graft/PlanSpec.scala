@@ -24,10 +24,7 @@ class PlanSpec extends SparkSpec {
     * the build via the guard test below.
     */
   private val sweepExclusions: Map[String, String] = Map(
-    "o51_kmeans" -> "KMeans build is RDD-side (MLlib) — no SQL plan to sweep",
-    "q_graph_build" -> "full clustering build: RDD-side KMeans + driver-bounded Ward",
     "q_graph_children" -> "serves from the memoized graph-build artifact (no fresh plan)",
-    "q_ann_ivf" -> "IVF index build is RDD-side KMeans; probe side swept via q_ann_recall",
     "o55_nn_inference" -> "mapPartitions model handle: plan is a LogicalRDD barrier",
     "o02_wholefile_roundtrip" -> "executes a text sink at plan time (write half of the round trip)",
     "o03_csv_roundtrip" -> "executes a CSV sink at plan time (write half of the round trip)",
