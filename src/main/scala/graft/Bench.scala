@@ -24,50 +24,9 @@ import java.nio.file.{Files, Paths}
   */
 object Bench {
   def main(args: Array[String]): Unit = {
-    // Scratch sinks (the roundtrip queries' write targets, Derby, the
-    // events time-split) resolve java.io.tmpdir at call time; point it
-    // at tmpfs so the I/O queries measure the engine, not /tmp's disk.
-    if (new java.io.File("/dev/shm").isDirectory) {
-      val t = new java.io.File("/dev/shm/graft_tmp")
-      t.mkdirs()
-      sys.props("java.io.tmpdir") = t.getAbsolutePath
-    }
+    GraftSession.tmpdirOnTmpfs()
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors().toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      // static conf, default 100 generated classes: a 120-query sweep
-      // evicts everything between a query's interleaved reps, making
-      // every rep pay whole-stage recompilation; size it to the sweep
-      .config("spark.sql.codegen.cache.maxEntries", "4096")
-      // AQE coalescing with the DEFAULT parallelismFirst=true refuses to
-      // coalesce below defaultParallelism — so every sub-MB shuffle in
-      // the ~80 small queries still runs 32 reduce tasks of <1 KB each,
-      // pure scheduler floor (VERDICT r8 #1a). false = size-based: KB
-      // shuffles collapse to 1 task. The advisory is sized to the BENCH
-      // (1 MB): with the cluster default of 64 MB the few MB-scale
-      // CPU-bound shuffles here (q_act_features windows) collapse to
-      // one core too — measured 0.58 s → 2.1 s. 1 MB keeps those at
-      // data/1 MB ≈ 4-30 tasks while the KB floor still collapses; a
-      // real cluster keeps the 64 MB default, where its stages are
-      // GB-scale and never hit this boundary.
-      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst", "false")
-      .config("spark.sql.adaptive.advisoryPartitionSizeInBytes", "1m")
-      // Scratch space (shuffle spill files, RocksDB state working dirs)
-      // on tmpfs when available: the bench box has 126 G of /dev/shm and
-      // the per-micro-batch state-store commit floor is fsync-bound, not
-      // data-bound. Static conf — must be set before the context exists.
-      .config("spark.local.dir",
-        if (new java.io.File("/dev/shm").isDirectory) "/dev/shm/graft_local"
-        else sys.props("java.io.tmpdir"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.build()
     // Warmup pass at the smallest SF: JIT + codegen compilation otherwise
     // lands entirely on whichever query runs first (alphabetically o09)
     // and on the regex-heavy text queries, skewing per-query numbers.
@@ -103,7 +62,7 @@ object Bench {
     // artifact must also run that build_* entry, or rep 1 silently pays
     // the cold build inside the query time (1 cold + 1 warm under
     // min-of-2 — not what the full sweep measures; ADVICE r11 #3).
-    // The registry lives next to benchArtifacts in SparkEntry.
+    // The closure is derived from the build registry in SparkEntry.
     val artifactDeps = SparkEntry.artifactDeps
     val onlyQ =
       if (onlyQ0.isEmpty) onlyQ0
@@ -176,13 +135,12 @@ object Bench {
       .empty[String, Vector[graft.streaming.StreamingTwins.PhaseSample]]
     def runOnce(name: String, fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Unit = {
       if (skip(name)) return
-      // Per-query clear: scratch persists (per-query intermediates) and
-      // the dedup bucket cache (its DuckDB twins recompute the bucketing
+      // Per-query clear: scratch persists and query-lifetime memos (the
+      // dedup bucket cache: its DuckDB twins recompute the bucketing
       // in-query, so the Spark side must pay it per query for a fair
       // ratio). Build-artifact memos survive — they are cleared at pass
       // boundaries and rebuilt by the explicit build_* entries.
       Scratch.releaseAll()
-      graft.queries.DedupQueries.clearCache()
       val g0 = gcMs()
       val t0 = System.nanoTime()
       try {
@@ -252,8 +210,7 @@ object Bench {
     // build inline (inflating the twin) and leave the build entry
     // timing a warm memo (a lie in the other direction).
     val isStream = (n: String) => n.startsWith("q_stream_")
-    val artifactDependents: Set[String] =
-      SparkEntry.artifactDeps.values.flatten.toSet
+    val artifactDependents: Set[String] = artifactDeps.values.flatten.toSet
     val (streamNamed, otherNamed) = named.partition(t => isStream(t._1))
     val (streamDep, streamIndep) =
       streamNamed.partition(t => artifactDependents(t._1))

@@ -1,34 +1,17 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev tool (r18): dump `.explain("formatted")` for named queries to
   * files — the plan evidence the optimization rounds commit under
   * `plans/`. Usage: runMain graft.PlanDump <sfDir> <outDir> q1 [q2 ...]
-  * Uses the Bench session shape (same shuffle-partition / AQE config)
-  * so the dumped plan is the one the bench executes.
+  * Runs on [[GraftSession]] with Bench's tmpdir, so the dumped plan is
+  * the one the bench executes.
   */
 object PlanDump {
   def main(args: Array[String]): Unit = {
-    if (new java.io.File("/dev/shm").isDirectory) {
-      val t = new java.io.File("/dev/shm/graft_tmp")
-      t.mkdirs()
-      sys.props("java.io.tmpdir") = t.getAbsolutePath
-    }
+    GraftSession.tmpdirOnTmpfs()
     val Array(sfDir, outDir) = args.take(2)
     val names = args.drop(2)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors().toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst", "false")
-      .config("spark.sql.adaptive.advisoryPartitionSizeInBytes", "1m")
-      .getOrCreate()
+    val spark = GraftSession.build()
     spark.sparkContext.setLogLevel("ERROR")
     new java.io.File(outDir).mkdirs()
     names.foreach { n =>

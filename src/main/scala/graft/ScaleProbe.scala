@@ -14,30 +14,7 @@ object ScaleProbe {
   def main(args: Array[String]): Unit = {
     val dir = args(0)
     val mode = args(1)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
-      Runtime.getRuntime.availableProcessors().toString)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      // mirror Bench's AQE stance so probes see the benched plans
-      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst",
-        sys.env.getOrElse("SPARK_GRAFT_PFIRST", "false"))
-      .config("spark.sql.adaptive.advisoryPartitionSizeInBytes", "1m")
-      .config("spark.sql.adaptive.enabled",
-        sys.env.getOrElse("SPARK_GRAFT_AQE", "true"))
-      // dev A/B (r19 stream probe): file:// without the ChecksumFileSystem
-      // wrapper — skips the .crc sidecar write+read on every checkpoint
-      // metadata-log and state-store file
-      .config("spark.hadoop.fs.file.impl",
-        if (sys.env.get("SPARK_GRAFT_RAWFS").contains("1"))
-          "org.apache.hadoop.fs.RawLocalFileSystem"
-        else "org.apache.hadoop.fs.LocalFileSystem")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftSession.build()
     if (mode == "pii") println(piiProbe(spark, dir))
     else if (mode == "tfidf") println(tfidfProbe(spark, dir))
     else if (mode == "graphx") println(graphxProbe(spark, dir))
@@ -407,7 +384,7 @@ object ScaleProbe {
   private def bitsProbe(spark: SparkSession, dir: String, arg: String): String =
     arg.split(",").map(_.trim.toInt).map { b =>
       // cold per width: drop the memoized bucket table
-      graft.queries.DedupQueries.clearCache()
+      graft.Scratch.releaseAll()
       spark.catalog.clearCache()
       val t0 = System.nanoTime()
       val pairs = graft.queries.DedupQueries.embedPairsMp(spark, dir, b).count()
@@ -685,7 +662,7 @@ object ScaleProbe {
     // the process env when invoking — here we just measure both runs
     // as configured (caller sets SPARK_GRAFT_LPA_BCAST)
     def run(): (Long, Double, Long, Long) = {
-      graft.Scratch.releaseAll(); graft.queries.DedupQueries.clearCache()
+      graft.Scratch.releaseAll()
       withShuffleBytes(spark) {
         graft.SparkEntry.queries("q_graph_communities")(spark, dir)
           .queryExecution.toRdd.count()

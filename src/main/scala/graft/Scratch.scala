@@ -27,10 +27,10 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   *    plans (PlanSpec does this; see its `plan()` helper).
   *
   * Unpersisting is always safe: a later action on the same result frame
-  * just recomputes the intermediate (slower, never wrong). The memoized
-  * BUILD artifacts (graph build, IVF index, LSH bucket table) are
-  * deliberately NOT scratch — they are reused across queries and have
-  * their own keyed caches with `clearCache()` hooks.
+  * just recomputes the intermediate (slower, never wrong). Both release
+  * points also drop the query-lifetime memos (see [[SessionCache]]); the
+  * memoized BUILD artifacts are deliberately NOT scratch — they are
+  * reused across queries and dropped only by [[SparkEntry.clearCaches]].
   */
 object Scratch {
 
@@ -59,15 +59,20 @@ object Scratch {
     df
   }
 
-  /** Unpersist every scratch frame registered for `spark`. */
-  def release(spark: SparkSession): Unit =
+  /** Unpersist every scratch frame and query memo of `spark`. */
+  def release(spark: SparkSession): Unit = {
     reg.synchronized { reg.remove(key(spark)) }
       .foreach(_.foreach(_.unpersist()))
+    SessionCache.release(SessionCache.Query, spark)
+  }
 
-  /** Unpersist every scratch frame in every session (bench hook). */
+  /** Unpersist every scratch frame and query memo in every session
+    * (bench hook).
+    */
   def releaseAll(): Unit = {
     val all = reg.synchronized { val vs = reg.values.toList; reg.clear(); vs }
     all.foreach(_.foreach(_.unpersist()))
+    SessionCache.releaseAll(SessionCache.Query)
   }
 
   /** Number of live scratch frames for `spark` (test hook). */

@@ -10,8 +10,35 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 import org.apache.spark.sql.execution.{SparkPlan, SparkStrategy}
 
-/** Session-scoped memo cache for expensive build artifacts (graph build,
-  * IVF index, LSH bucket table, E1 pipeline).
+/** Session-scoped memo cache, declared once with its lifetime and the
+  * action that releases a dropped value.
+  *
+  * Every memo in the engine has exactly one of three lifetimes, and the
+  * lifetime alone decides who drops it — no module keeps a clear hook:
+  *
+  *  - '''catalog''' ([[SessionCache.catalog]]): table metadata and input
+  *    staging — the [[Tables]] loads, the [[Stats]] scalars, the bucketed
+  *    join tables and the time-split events layout. Derived from
+  *    immutable inputs, so never stale, and never cleared: bench reps
+  *    stay cold on work while skipping what a real catalog never repays.
+  *  - '''artifact''' ([[SessionCache.artifact]]): the build artifacts the
+  *    `build_*` bench entries time — graph tree and depth table, IVF, NSW,
+  *    HNSW and PQ indexes, BM25 index and upsert state, BPE model, E1
+  *    pipeline, pagerank graph, durable index stores. Drained and
+  *    released together by [[SparkEntry.clearCaches]] (Bench's cold
+  *    pass boundary).
+  *  - '''query''' ([[SessionCache.query]]): an intermediate shared by
+  *    the queries of one pack but billed to each query — the dedup LSH
+  *    bucket table, whose DuckDB twins recompute the bucketing in-query.
+  *    Released with the [[Scratch]] persists by `Scratch.release(spark)`
+  *    (one session) and `Scratch.releaseAll()` (every session; Bench runs
+  *    it before every timed query).
+  *
+  * The release action must unpersist every frame the value persisted:
+  * dropping the entry alone leaves its InMemoryRelation in the context's
+  * CacheManager, where an identical later plan would silently
+  * substitute the stale cache — a "cold" build rep that isn't, and a
+  * leak in a long-lived embedder.
   *
   * Keys on the session's UUID — not `System.identityHashCode`, which can
   * collide and never evicts (VERDICT r6 "what's wrong" #3). Storage is a
@@ -33,28 +60,24 @@ import org.apache.spark.sql.execution.{SparkPlan, SparkStrategy}
   *    hook, and is still REQUIRED when cached values were `.persist()`d:
   *    the context's CacheManager holds the physical plan (and through it
   *    the session) until unpersist, and executor memory can only be
-  *    freed by that RPC — no GC can do it.
-  *
-  * `clearAll()` keeps the bench cold-timing contract: Bench drops ALL
-  * memoized artifacts between reps via [[SparkEntry.clearCaches]].
+  *    freed by that RPC — no GC can do it. Eviction skips the release
+  *    action (a dead context already freed the frames).
   */
-final class SessionCache[V] {
+final class SessionCache[V] private (val name: String,
+    val lifetime: SessionCache.Lifetime, release: V => Unit) {
 
   // per-instance sub-map key inside the shared session bucket: two
   // caches never see each other's entries
   private val cacheId = SessionCache.nextCacheId()
+  SessionCache.declared.add(this)
 
   def getOrElseUpdate(s: SparkSession, dir: String)(build: => V): V =
     SessionCache.bucketOf(s).sub(cacheId)
       .getOrElseUpdate(dir, build).asInstanceOf[V]
 
-  /** Drop and return every entry in every live session (bench cold-timing
-    * hook; callers unpersist returned frames as needed — GC/stop eviction
-    * deliberately does NOT, a dead context already freed them).
-    */
-  def clearAll(): Iterable[V] =
-    SessionCache.liveBuckets().flatMap(_.drain(cacheId))
-      .map(_.asInstanceOf[V])
+  /** Drop and release this cache's entries in `buckets`. */
+  private def drain(buckets: List[SessionCache.Bucket]): Unit =
+    buckets.flatMap(_.drain(cacheId)).foreach(v => release(v.asInstanceOf[V]))
 
   /** Number of live entries for `s` (test hook). */
   def activeCount(s: SparkSession): Int =
@@ -62,6 +85,42 @@ final class SessionCache[V] {
 }
 
 object SessionCache {
+
+  sealed trait Lifetime
+  case object Catalog extends Lifetime
+  case object Artifact extends Lifetime
+  case object Query extends Lifetime
+
+  // every cache ever declared, in declaration order: the clear points
+  // walk this instead of per-module hooks
+  private val declared =
+    new java.util.concurrent.CopyOnWriteArrayList[SessionCache[_]]
+
+  def catalog[V](name: String): SessionCache[V] =
+    new SessionCache[V](name, Catalog, _ => ())
+
+  def artifact[V](name: String)(release: V => Unit): SessionCache[V] =
+    new SessionCache(name, Artifact, release)
+
+  def query[V](name: String)(release: V => Unit): SessionCache[V] =
+    new SessionCache(name, Query, release)
+
+  /** Every declared cache of `lifetime`, in declaration order. A cache
+    * is declared when its owning object initializes; an uninitialized
+    * owner has no entries to drop.
+    */
+  private[graft] def ofLifetime(lifetime: Lifetime): Seq[SessionCache[_]] = {
+    import scala.jdk.CollectionConverters._
+    declared.asScala.toSeq.filter(_.lifetime == lifetime)
+  }
+
+  /** Drop and release every `lifetime` entry in every live session. */
+  private[graft] def releaseAll(lifetime: Lifetime): Unit =
+    ofLifetime(lifetime).foreach(_.drain(liveBuckets()))
+
+  /** Drop and release the `lifetime` entries of `s`. */
+  private[graft] def release(lifetime: Lifetime, s: SparkSession): Unit =
+    ofLifetime(lifetime).foreach(_.drain(peekBucket(s).toList))
 
   // sessionUUID is private[sql] in Scala but public in bytecode; one
   // cached Method handle keeps the lookup cheap

@@ -15,15 +15,13 @@ import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
   * which at 120 declared queries × reps is a measurable slice of the
   * per-query driver floor (VERDICT r8 #1a). A real deployment holds
   * this in the catalog (a registered table's schema is resolved once);
-  * the memo is exactly that catalog role. Deliberately NOT dropped by
-  * `SparkEntry.clearCaches` — table METADATA is catalog state, not a
-  * per-query build artifact, so bench reps stay cold on work while
-  * skipping the re-list a real engine never repays. The cached object
-  * is an immutable logical plan; every query still re-plans and
-  * re-executes from it.
+  * the memo is exactly that catalog role, so it has the catalog
+  * lifetime (never cleared; see [[SessionCache]]). The cached object is
+  * an immutable logical plan; every query still re-plans and re-executes
+  * from it.
   */
 object Tables {
-  private val cache = new SessionCache[DataFrame]
+  private val cache = SessionCache.catalog[DataFrame]("tables")
 
   def t(spark: SparkSession, dir: String, name: String): DataFrame =
     cache.getOrElseUpdate(spark, s"$dir/$name") {

@@ -165,11 +165,7 @@ object IndexStore {
   // save is idempotent per (session, dir): a path string only, nothing
   // persisted — memoized so bench reps of q_index_persist time load +
   // serve, never the writer (build_index_store is the timed build).
-  private val savedCache = new graft.SessionCache[String]
-
-  private[graft] def clearCache(): Unit = {
-    savedCache.clearAll(); appendedCache.clearAll(); compactedCache.clearAll(); ()
-  }
+  private val savedCache = graft.SessionCache.artifact[String]("index_store")(_ => ())
 
   /** Write the session's built indexes (forcing their builds if not
     * yet memoized) as parquet artifacts under [[storeRoot]], plus the
@@ -264,7 +260,8 @@ object IndexStore {
     .get(sys.props("java.io.tmpdir"),
       "graft_index_store_up_" + graft.Scratch.dirTag(d)).toString
 
-  private val appendedCache = new graft.SessionCache[String]
+  private val appendedCache =
+    graft.SessionCache.artifact[String]("index_store_append")(_ => ())
 
   /** Incremental durable-index maintenance (r18 — VERDICT r17 #1, the
     * last capability gap vs the reference's always-updatable Postgres
@@ -402,7 +399,8 @@ object IndexStore {
     .get(sys.props("java.io.tmpdir"),
       "graft_index_store_cp_" + graft.Scratch.dirTag(d)).toString
 
-  private val compactedCache = new graft.SessionCache[String]
+  private val compactedCache =
+    graft.SessionCache.artifact[String]("index_store_compact")(_ => ())
 
   /** Small-file compaction of an appended store (r18 — the third leg
     * of the durable-index lifecycle: save → append → COMPACT → serve,

@@ -51,11 +51,8 @@ object BpeQueries {
   final case class BpeModel(ranks: Map[(String, String), Int],
       wordToks: DataFrame, termsPath: String)
 
-  private val cache = new graft.SessionCache[BpeModel]
-
-  /** Drop the memoized models (bench cold-timing hook). */
-  def clearCache(): Unit =
-    cache.clearAll().foreach(_.wordToks.unpersist())
+  private val cache =
+    graft.SessionCache.artifact[BpeModel]("bpe_model")(_.wordToks.unpersist())
 
   /** Fixed-path merges export the static oracle SQL replays — same
     * last-build-wins / one-dir-per-Verify constraint as the graph, E1,

@@ -266,16 +266,8 @@ object CorpusQueries {
   private[graft] final case class Bm25Index(post: DataFrame, lens: DataFrame,
       g: DataFrame, termsPath: String)
 
-  private val bm25Cache = new graft.SessionCache[Bm25Index]
-
-  /** Unpersist and drop all memoized BM25 indexes (bench cold-timing
-    * hook, via [[graft.SparkEntry.clearCaches]]).
-    */
-  def clearCache(): Unit = {
-    bm25Cache.clearAll().foreach { ix =>
-      ix.post.unpersist(); ix.lens.unpersist()
-    }
-    bm25UpsertCache.clearAll().foreach(_.dPost.unpersist())
+  private val bm25Cache = graft.SessionCache.artifact[Bm25Index]("bm25_index") {
+    ix => ix.post.unpersist(); ix.lens.unpersist()
   }
 
   /** Live memo entries for `s` (IndexStoreSpec's zero-rebuild proof). */
@@ -553,7 +545,8 @@ object CorpusQueries {
       dPost: DataFrame, dLens: DataFrame, post2: DataFrame,
       lens2: DataFrame, g2: DataFrame, termsPath: String)
 
-  private val bm25UpsertCache = new graft.SessionCache[Bm25UpsertState]
+  private val bm25UpsertCache =
+    graft.SessionCache.artifact[Bm25UpsertState]("bm25_upsert")(_.dPost.unpersist())
 
   private[graft] def bm25UpsertState(s: SparkSession, d: String): Bm25UpsertState =
     bm25UpsertCache.getOrElseUpdate(s, d) {

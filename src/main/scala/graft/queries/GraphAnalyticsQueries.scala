@@ -70,10 +70,8 @@ object GraphAnalyticsQueries {
     */
   private[graft] case class PrGraph(edges: DataFrame, deg: DataFrame, nNodes: Long)
 
-  private val prCache = new graft.SessionCache[PrGraph]
-
-  def clearCache(): Unit = prCache.clearAll().foreach { g =>
-    g.edges.unpersist(); g.deg.unpersist()
+  private val prCache = graft.SessionCache.artifact[PrGraph]("pagerank_graph") {
+    g => g.edges.unpersist(); g.deg.unpersist()
   }
 
   private[graft] def prGraph(s: SparkSession, d: String): PrGraph =
@@ -307,7 +305,7 @@ object GraphAnalyticsQueries {
     */
   private[graft] def lpaProbe(s: SparkSession, d: String): String = {
     val Seq(full, pairs) = graft.ScaleProbe.coldStages(
-      () => { graft.Scratch.releaseAll(); DedupQueries.clearCache() },
+      () => graft.Scratch.releaseAll(),
       "full" -> (() => communities(s, d).count()),
       "pairs" -> (() => DedupQueries.minhash(s, d).count()))
     f"full=${full._3}%.2fs (${full._2} nodes) pairs=${pairs._3}%.2fs (${pairs._2}) " +

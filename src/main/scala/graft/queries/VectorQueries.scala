@@ -106,22 +106,10 @@ object VectorQueries {
     */
   // index built once per data dir (an index is a persistent artifact, not
   // per-query work — a user would build it once and query many times)
-  private val ivfCache = new graft.SessionCache[graft.operators.AnnIvf.IvfIndex]
-  private val nswCache = new graft.SessionCache[graft.operators.AnnNsw.NswIndex]
-
-  /** Drop the memoized indexes (bench cold-timing hook). Unpersists the
-    * frames each index owns — dropping the memo entry alone would leave
-    * the InMemoryRelations in the session's CacheManager, where a later
-    * identical rebuild plan would silently substitute the stale cache
-    * (r12; the bench was safe only via its pass-boundary
-    * `catalog.clearCache()`, a long-lived embedder was not).
-    */
-  def clearCache(): Unit = {
-    ivfCache.clearAll().foreach(_.assigned.unpersist())
-    nswCache.clearAll().foreach(_.graph.unpersist())
-    hnswCache.clearAll().foreach(_.layers.unpersist())
-    pqCache.clearAll().foreach(_.codes.unpersist())
-  }
+  private val ivfCache = graft.SessionCache
+    .artifact[graft.operators.AnnIvf.IvfIndex]("ivf_index")(_.assigned.unpersist())
+  private val nswCache = graft.SessionCache
+    .artifact[graft.operators.AnnNsw.NswIndex]("nsw_graph")(_.graph.unpersist())
 
   /** Where the trained coarse-quantizer centroids are exported for the
     * q_ann_ivf oracle (r12, VERDICT r11 #6 — the q_graph_children /
@@ -197,7 +185,8 @@ object VectorQueries {
   private[graft] def hnswExportPath: String = java.nio.file.Paths
     .get(sys.props("java.io.tmpdir"), "graft_hnsw_layers").toString
 
-  private val hnswCache = new graft.SessionCache[graft.operators.AnnHnsw.HnswIndex]
+  private val hnswCache = graft.SessionCache
+    .artifact[graft.operators.AnnHnsw.HnswIndex]("hnsw_layers")(_.layers.unpersist())
 
   private[graft] def hnswIndex(s: SparkSession, d: String): graft.operators.AnnHnsw.HnswIndex =
     hnswCache.getOrElseUpdate(s, d) {
@@ -220,7 +209,8 @@ object VectorQueries {
   private val PqK = 16
   private val PqDSub = 8 // 64-dim embeddings (TablesSpec) / PqM
 
-  private val pqCache = new graft.SessionCache[graft.operators.PqOps.PqIndex]
+  private val pqCache = graft.SessionCache
+    .artifact[graft.operators.PqOps.PqIndex]("pq_codebooks")(_.codes.unpersist())
 
   private[graft] def pqExportPath: String = java.nio.file.Paths
     .get(sys.props("java.io.tmpdir"), "graft_pq_codebooks").toString

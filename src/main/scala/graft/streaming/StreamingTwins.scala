@@ -64,17 +64,17 @@ object StreamingTwins {
   }
 
   /** Runs `body` with streaming-tuned session confs (fewer state
-    * partitions + RocksDB state store), restoring the caller's values
-    * after. Safe because every twin runs its query synchronously inside
-    * (`awaitTermination` before return) and the harness runs queries
-    * sequentially. The number of state partitions is pinned into the
+    * partitions + the HDFS-backed state store), restoring the caller's
+    * values after. Safe because every twin runs its query synchronously
+    * inside (`awaitTermination` before return) and the harness runs
+    * queries sequentially. The number of state partitions is pinned into the
     * checkpoint at first batch, so it must be set BEFORE `start()`.
     *
     * On exit every loaded state-store provider is UNLOADED
     * (`StateStore.unloadAll`, reflective — private[sql]): a finished
-    * AvailableNow run otherwise leaves its RocksDB instances (native
-    * memory, open files, maintenance-thread work) loaded in the
-    * executor singleton until the 60 s maintenance tick, and across a
+    * AvailableNow run otherwise leaves its state stores (maps, open
+    * files, maintenance-thread work) loaded in the executor singleton
+    * until the 60 s maintenance tick, and across a
     * 120-query bench sweep dozens of dead runs' stores accumulate and
     * contaminate every later query's window. A long-lived embedder
     * gets the same hygiene for free on each twin call.
@@ -93,12 +93,9 @@ object StreamingTwins {
     val provKey = "spark.sql.streaming.stateStore.providerClass"
     val ckptKey = "spark.sql.streaming.checkpointLocation"
     val ndKey = "spark.sql.streaming.noDataMicroBatches.enabled"
-    val clogKey =
-      "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled"
     val oldParts = conf.get("spark.sql.shuffle.partitions")
     val oldProv = conf.getOption(provKey)
     val oldCkpt = conf.getOption(ckptKey)
-    val oldClog = conf.getOption(clogKey)
     val oldNd = conf.getOption(ndKey)
     conf.set("spark.sql.shuffle.partitions", StreamShufflePartitions)
     // The trailing NO-DATA micro-batch exists to advance the watermark
@@ -114,36 +111,18 @@ object StreamingTwins {
     // per run — the dominant floor of a small-data micro-batch. The
     // batching contracts are unaffected (they count DATA batches).
     if (!finalNoDataBatch) conf.set(ndKey, "false")
-    // Provider picked like a deployment would: by expected state size.
     // The twins' state is KB-scale, where the JVM-heap HDFS-backed store
-    // wins — a RocksDB provider pays a native instance spin-up per
-    // (store × partition × rep) that dominates these sub-second runs
-    // (q_stream_join: 4 stores × 2 partitions of init per cold rep).
-    // RocksDB stays the documented choice above ~100 MB of state per
-    // partition (off-heap, changelog commits); flip with
-    // SPARK_GRAFT_STATE_PROVIDER=rocksdb — the semantics and oracle
-    // hashes are provider-independent (both paths stay green).
-    val useRocks =
-      sys.env.getOrElse("SPARK_GRAFT_STATE_PROVIDER", "hdfs") == "rocksdb"
-    if (useRocks) {
-      conf.set(provKey,
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-      // Changelog checkpointing: commit the per-batch delta, not a
-      // RocksDB snapshot — the per-micro-batch floor the multi-batch
-      // twins pay 3×.
-      conf.set(clogKey, "true")
-    } else {
-      conf.set(provKey, "org.apache.spark.sql.execution.streaming." +
-        "state.HDFSBackedStateStoreProvider")
-    }
+    // wins: RocksDB pays a native instance spin-up per (store × partition
+    // × rep) that dominates these sub-second runs.
+    conf.set(provKey, "org.apache.spark.sql.execution.streaming." +
+      "state.HDFSBackedStateStoreProvider")
     // Fresh tmpfs checkpoint per twin run (queryName is unique per run,
     // so sub-paths can't collide even within one root).
     val ckptDir = s"$ckptRoot/${runId.get()}_${System.nanoTime()}"
     conf.set(ckptKey, ckptDir)
     try body finally {
       conf.set("spark.sql.shuffle.partitions", oldParts)
-      Seq((provKey, oldProv), (ckptKey, oldCkpt), (clogKey, oldClog),
-          (ndKey, oldNd)).foreach {
+      Seq((provKey, oldProv), (ckptKey, oldCkpt), (ndKey, oldNd)).foreach {
         case (k, Some(v)) => conf.set(k, v)
         case (k, None)    => conf.unset(k)
       }
@@ -169,7 +148,6 @@ object StreamingTwins {
       minDataBatches: Int = 1, maxDataBatches: Int = Int.MaxValue,
       finalNoDataBatch: Boolean = false): DataFrame =
     withStreamConf(df.sparkSession, finalNoDataBatch) {
-      val debug = sys.env.get("SPARK_GRAFT_STREAM_DEBUG").contains("1")
       val t0 = System.nanoTime()
       val name = s"graft_stream_${runId.incrementAndGet()}"
       val q = df.writeStream.format("memory").queryName(name)
@@ -195,14 +173,10 @@ object StreamingTwins {
       // where the in-sweep inflation lives, PERF.md); drain = sink
       // collect + LocalRelation copy + view drop. Always recorded to the
       // in-memory log (Bench dumps it to bench_out.json so a driver-run
-      // blowup can be attributed from the artifact itself, without an
-      // SPARK_GRAFT_STREAM_DEBUG rerun — VERDICT r11 #1).
+      // blowup can be attributed from the artifact itself — VERDICT r11 #1).
       val t3 = System.nanoTime()
       phaseLogAdd(PhaseSample(name,
         (t1 - t0) / 1e9, (t2 - t1) / 1e9, (t3 - t2) / 1e9))
-      if (debug)
-        System.err.println(f"[stream-debug] $name start=${(t1 - t0) / 1e9}%.3f " +
-          f"run=${(t2 - t1) / 1e9}%.3f drain=${(t3 - t2) / 1e9}%.3f")
       local
     }
 
@@ -252,10 +226,11 @@ object StreamingTwins {
   // holds only events at-or-after everything in file k. Replaying it
   // with maxFilesPerTrigger=1 yields genuine multi-micro-batch execution
   // with in-order arrival, so no row is ever late against the watermark.
-  // Memoized per (session, dir) and NOT dropped between bench reps:
-  // the layout is input staging (like the testdata itself), not query
-  // work — reps time the streaming execution, not the re-split.
-  private val splitCache = new graft.SessionCache[String]
+  // Memoized per (session, dir) with the catalog lifetime, never dropped
+  // between bench reps: the layout is input staging (like the testdata
+  // itself), not query work — reps time the streaming execution, not
+  // the re-split.
+  private val splitCache = graft.SessionCache.catalog[String]("events_time_split")
 
   private def timeSplitEvents(spark: SparkSession, dir: String, n: Int): String =
     splitCache.getOrElseUpdate(spark, s"$dir#$n") {

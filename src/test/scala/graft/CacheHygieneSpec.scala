@@ -11,8 +11,8 @@ class CacheHygieneSpec extends SparkSpec {
   private val sf = "/root/testdata/sf0.001"
 
   // the queries that persist per-call scratch frames (memoized BUILD
-  // artifacts — graph build, IVF index, LSH bucket table — are a
-  // different, deliberately keyed cache with clearCache hooks)
+  // artifacts — graph build, IVF index, BM25 index — are a different,
+  // artifact-lifetime memo that only clearCaches drops)
   // (q_tfidf_terms left this list in r16: its single-consumption
   // restructure removed the scratch persist entirely. q_autocorr left
   // it in the r18 optimization round: the dense grid now explodes out
@@ -102,28 +102,37 @@ class CacheHygieneSpec extends SparkSpec {
     // r12: dropping a memo entry without unpersisting its frames leaves
     // InMemoryRelations in the CacheManager, where an identical rebuild
     // plan would silently SUBSTITUTE the stale cache — a "cold" build
-    // rep that isn't, and a leak in a long-lived embedder. Build the
-    // memoized artifacts (BM25 index, IVF index, graph tree) through
-    // their declared queries, then assert the full clear leaves the
-    // CacheManager empty.
+    // rep that isn't, and a leak in a long-lived embedder. Run every
+    // bench artifact build (dependency order, as a bench pass does),
+    // then assert the full clear leaves the CacheManager empty and every
+    // artifact memo drained, while the catalog memos survive.
     SparkEntry.clearCaches()
     spark.sharedState.cacheManager.clearCache()
-    Seq("q_bm25_topk", "q_ann_ivf", "q_graph_build").foreach { name =>
-      SparkEntry.queries(name)(spark, sf).queryExecution.toRdd
-        .foreachPartition(it => it.foreach(_ => ()))
+    assert(Stats.scalar(spark, sf, "hygiene:probe")(42L) === 42L)
+    SparkEntry.benchArtifacts.foreach { case (_, fn) =>
+      fn(spark, sf).queryExecution.toRdd.foreachPartition(it => it.foreach(_ => ()))
     }
     assert(!spark.sharedState.cacheManager.isEmpty,
       "the builds should have persisted frames")
+    val memos = SessionCache.ofLifetime(SessionCache.Artifact)
+    val unfilled = memos.filter(_.activeCount(spark) == 0).map(_.name)
+    assert(unfilled.isEmpty, s"no build filled: ${unfilled.mkString(",")}")
     SparkEntry.clearCaches()
     assert(spark.sharedState.cacheManager.isEmpty,
       "clearCaches left persisted build frames in the CacheManager")
+    val left = memos.filter(_.activeCount(spark) > 0).map(_.name)
+    assert(left.isEmpty, s"clearCaches left artifact memo entries: ${left.mkString(",")}")
+    // catalog lifetime: Tables loads and Stats scalars are never cleared
+    val tables = SessionCache.ofLifetime(SessionCache.Catalog).filter(_.name == "tables")
+    assert(tables.map(_.activeCount(spark)).sum > 0, "clearCaches dropped the Tables memo")
+    assert(Stats.scalar(spark, sf, "hygiene:probe")(fail("Stats memo was cleared")) === 42L)
   }
 
   test("session-stop eviction: no memo cache entry survives the session") {
     // VERDICT r6 "what's wrong" #3: caches key on the session UUID and a
     // context listener evicts on stop. The suites share one context, so
     // drive the listener body directly (same code path the stop fires).
-    val cache = new SessionCache[String]
+    val cache = SessionCache.catalog[String]("test")
     assert(cache.getOrElseUpdate(spark, "dirA")("v1") === "v1")
     assert(cache.getOrElseUpdate(spark, "dirB")("v2") === "v2")
     assert(cache.activeCount(spark) === 2)
@@ -140,7 +149,7 @@ class CacheHygieneSpec extends SparkSpec {
     // The bucket is attached to the session itself and held here only
     // weakly, so session + bucket + cached frames form one cycle the GC
     // reclaims — no manual evictSession needed.
-    val cache = new SessionCache[org.apache.spark.sql.DataFrame]
+    val cache = SessionCache.catalog[org.apache.spark.sql.DataFrame]("test")
     var s2: org.apache.spark.sql.SparkSession = spark.newSession()
     val k = SessionCache.keyOf(s2)
     cache.getOrElseUpdate(s2, "dirD")(s2.range(10).toDF())
@@ -155,7 +164,7 @@ class CacheHygieneSpec extends SparkSpec {
     }
     assert(!SessionCache.isLive(k),
       "retired session's cache bucket not reclaimed within 30s of GC pressure")
-    assert(new SessionCache[String].activeCount(spark) === 0) // fresh cache, empty sub
+    assert(SessionCache.catalog[String]("test").activeCount(spark) === 0) // fresh cache, empty sub
     SessionCache.evictSession(spark) // leave no residue for other tests
   }
 
@@ -164,7 +173,7 @@ class CacheHygieneSpec extends SparkSpec {
     // (clearing only its hooks), so a session reused after eviction
     // re-registers its evictor instead of leaking a dead one — and a
     // second evict still drops the new entries.
-    val cache = new SessionCache[String]
+    val cache = SessionCache.catalog[String]("test")
     cache.getOrElseUpdate(spark, "dirC")("v1")
     SessionCache.evictSession(spark)
     assert(cache.activeCount(spark) === 0)

@@ -13,13 +13,7 @@ trait SparkSpec extends AnyFunSuite {
 }
 
 object SparkSpec {
-  lazy val session: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.extensions", "graft.GraftExtensions")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    .config("spark.ui.enabled", "false")
-    .appName("graft-tests")
-    .getOrCreate()
+  // the engine's one session (bench settings included), at a fixed 4
+  // cores so partition-sensitive assertions don't depend on the box
+  lazy val session: SparkSession = GraftSession.build(cpus = 4)
 }
