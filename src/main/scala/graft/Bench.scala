@@ -21,6 +21,11 @@ import java.nio.file.{Files, Paths}
   *    min-of-2 beats a timeout); remaining budget buys extra reps for
   *    the noisiest queries only. The JSON line is emitted no matter
   *    where the budget ran out.
+  *
+  * Each `stats.<entry>` in `bench_out.json` also carries the [[Ledger]]
+  * cost vector of the entry's fastest rep (jobs, stages, tasks, executor
+  * time, shuffle and spill bytes, planning time, exchanges, broadcasts),
+  * so `SPARK_GRAFT_ONLY=<q>` is the probe for any declared query.
   */
 object Bench {
   def main(args: Array[String]): Unit = {
@@ -133,6 +138,8 @@ object Bench {
     // dumped to bench_out.json — see StreamingTwins.drainPhaseLog.
     val streamPhases = scala.collection.mutable.LinkedHashMap
       .empty[String, Vector[graft.streaming.StreamingTwins.PhaseSample]]
+    // the Ledger cost vector of each entry's fastest rep
+    val costAtMin = scala.collection.mutable.HashMap.empty[String, Ledger.Cost]
     def runOnce(name: String, fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Unit = {
       if (skip(name)) return
       // Per-query clear: scratch persists and query-lifetime memos (the
@@ -141,16 +148,27 @@ object Bench {
       // ratio). Build-artifact memos survive — they are cleared at pass
       // boundaries and rebuilt by the explicit build_* entries.
       Scratch.releaseAll()
-      val g0 = gcMs()
-      val t0 = System.nanoTime()
+      var t0 = System.nanoTime()
       try {
-        // Force every operator in the plan to actually run and every
-        // row to be produced: consume the InternalRow iterators.
-        fn(spark, sfDir).queryExecution.toRdd.foreachPartition(it => it.foreach(_ => ()))
-        val dt = (System.nanoTime() - t0) / 1e9
-        gcByQuery(name) = gcByQuery.getOrElse(name, 0L) + (gcMs() - g0)
+        var dt = Double.NaN
+        // the ledger's bus drains and plan walk sit outside the timed region
+        val (_, cost) = Ledger.measure(spark) {
+          val g0 = gcMs()
+          t0 = System.nanoTime()
+          val df = fn(spark, sfDir)
+          // Force every operator in the plan to actually run and every
+          // row to be produced: consume the InternalRow iterators.
+          df.queryExecution.toRdd.foreachPartition(it => it.foreach(_ => ()))
+          dt = (System.nanoTime() - t0) / 1e9
+          gcByQuery(name) = gcByQuery.getOrElse(name, 0L) + (gcMs() - g0)
+          df
+        }
         // NaN/Infinity would render as bare words and break the JSON.
-        if (dt.isFinite) { timesByQuery(name) = timesByQuery(name) :+ dt; spentS += dt }
+        if (dt.isFinite) {
+          if (timesByQuery(name).forall(dt < _)) costAtMin(name) = cost
+          timesByQuery(name) = timesByQuery(name) :+ dt
+          spentS += dt
+        }
         if (name.startsWith("q_stream_")) {
           val ph = graft.streaming.StreamingTwins.drainPhaseLog()
           if (ph.nonEmpty)
@@ -435,7 +453,8 @@ object Bench {
     val stats = results.collect { case (k, ts) if ts.nonEmpty =>
       "\"" + k + "\":{\"min\":" + ts.min + ",\"med\":" + median(ts) +
         ",\"max\":" + ts.max + ",\"reps\":" + ts.size +
-        ",\"gc_ms\":" + gcByQuery.getOrElse(k, 0L) + "}"
+        ",\"gc_ms\":" + gcByQuery.getOrElse(k, 0L) +
+        costAtMin.get(k).map("," + _.jsonFields).getOrElse("") + "}"
     }.mkString("{", ",", "}")
     val errs = failed.map("\"" + _ + "\"").mkString("[", ",", "]")
     val total = mins.map(_._2).filter(_ >= 0).sum

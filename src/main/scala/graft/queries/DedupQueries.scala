@@ -87,10 +87,8 @@ object DedupQueries {
   private[graft] def minhashBands(c: DataFrame): DataFrame =
     minhashBandsFromShingles(shingles(c))
 
-  /** The (doc_id, mh0..mh7) signature frame — ONE home for the md5 +
-    * 8-min aggregation (r19 review: mhProbe carried an inline copy that
-    * would silently keep timing the OLD pipeline under a scheme
-    * change).
+  /** The (doc_id, mh0..mh7) signature frame: the md5 + 8-min
+    * aggregation.
     *
     * NOTE (r19 A/B): min(string) compiles to a SortAggregate (min over
     * STRING has no fixed-width hash-agg buffer). Replacing the 8 mins
@@ -99,7 +97,7 @@ object DedupQueries {
     * consumer at sf0.1): the per-row radix parse ×8 costs more than
     * the sort it removes at these row counts. Keep the string mins.
     */
-  private[graft] def minhashSig(sh: DataFrame): DataFrame = {
+  private def minhashSig(sh: DataFrame): DataFrame = {
     val seedAggs = (0 to 7).map(k =>
       min(substring(col("h"), 3 * k + 1, 8)).as(s"mh$k"))
     sh.withColumn("h", md5(col("sh")))
@@ -631,12 +629,8 @@ object DedupQueries {
   // (doc_id → doc_id+1 within runs of 10, ~10 Pregel supersteps) so the
   // DuckDB oracle can replay the closure with a recursive CTE; in
   // production the edge input is any pair generator above.
-  /** The deterministic chain relation q_dedup_cc closes over — ONE home
-    * shared with the ScaleProbe `ccparts` sizing probe (r19 review: a
-    * probe-side copy would silently report estimates for a relation the
-    * shipped query no longer uses).
-    */
-  private[graft] def ccChainEdges(s: SparkSession, d: String): DataFrame = {
+  /** The deterministic chain relation q_dedup_cc closes over. */
+  private def ccChainEdges(s: SparkSession, d: String): DataFrame = {
     val docs = Tables.documents(s, d).select(col("doc_id"))
     docs.filter(pmod(col("doc_id"), lit(10)) =!= 9)
       .select(col("doc_id").as("src"), (col("doc_id") + 1L).as("dst"))
@@ -798,8 +792,7 @@ object DedupQueries {
     * the raw text on doc_id makes the (doc_id, tok) groupBy, the ssq
     * groupBy(doc_id) and the scoring join's doc_a probe all
     * exchange-free — only the vocab-sized df aggregate still shuffles
-    * (and AQE broadcasts it back). Shared with [[docsimProbe]] so the
-    * probe always measures the SHIPPED plan shape.
+    * (and AQE broadcasts it back).
     */
   private def tfidfTerms(s: SparkSession, d: String): DataFrame = {
     val c = corpus(s, d)
@@ -837,39 +830,6 @@ object DedupQueries {
         "round(CAST(dot AS DOUBLE) / sqrt(CAST(sa AS DOUBLE) * CAST(sb AS DOUBLE)), 6) + 0.0"))
       .filter(col("cos") >= TfIdfCosMin)
       .select("doc_a", "doc_b", "cos")
-  }
-
-  /** Stage decomposition of the shared MinHash pipeline (ScaleProbe
-    * `mh`, r19): corpus scan+union, shingle explode, md5, the 8-min
-    * signature agg, band table, full band-join pairs — each timed
-    * standalone cold (toRdd.count materializes every column). Dev-only.
-    */
-  private[graft] def mhProbe(s: SparkSession, d: String): String = {
-    def full(df: DataFrame): Long = df.queryExecution.toRdd.count()
-    val stages = graft.ScaleProbe.coldStages(
-      () => graft.Scratch.releaseAll(),
-      "corpus" -> (() => full(corpus(s, d))),
-      "shingles" -> (() => full(shingles(corpus(s, d)))),
-      "md5" -> (() => full(shingles(corpus(s, d)).withColumn("h", md5(col("sh"))))),
-      "sig" -> (() => full(minhashSig(shingles(corpus(s, d))))),
-      "bands" -> (() => full(minhashBands(corpus(s, d)))),
-      "pairs" -> (() => full(minhash(s, d))))
-    stages.map { case (n, rows, sec) => f"$n=$sec%.2fs($rows)" }.mkString(" ")
-  }
-
-  /** Phase attribution for q_doc_sim_tfidf (ScaleProbe `docsim`): the
-    * candidate generation (minhash bands + self-join) and the weighted
-    * term table are each timed standalone, cold; the remainder of a cold
-    * full run is the scoring-join + norm pipeline. Dev-only.
-    */
-  private[graft] def docsimProbe(s: SparkSession, d: String): String = {
-    val Seq(full, cand, terms) = graft.ScaleProbe.coldStages(
-      () => graft.Scratch.releaseAll(),
-      "full" -> (() => tfidfCos(s, d).count()),
-      "cand" -> (() => minhash(s, d).count()),
-      "terms" -> (() => tfidfTerms(s, d).count()))
-    f"full=${full._3}%.2fs (${full._2} rows) cand=${cand._3}%.2fs (${cand._2} pairs) " +
-      f"terms=${terms._3}%.2fs (${terms._2} rows) scoring~=${full._3 - cand._3 - terms._3}%.2fs"
   }
 
   // def, not val: references minhashSql, declared LATER in this object —

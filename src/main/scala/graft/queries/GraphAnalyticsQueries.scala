@@ -237,7 +237,14 @@ object GraphAnalyticsQueries {
       Tables.documents(s, d).count()
     }
 
-  private val communities: Q = (s, d) => {
+  private val communities: Q = (s, d) => lpaCommunities(s, d)
+
+  /** The LPA rounds of q_graph_communities. The round's join shape is
+    * chosen by the node-bound gate below; `broadcastLabels` forces it
+    * one way, so a test can compare the two shapes' rows.
+    */
+  private[graft] def lpaCommunities(s: SparkSession, d: String,
+      broadcastLabels: Option[Boolean] = None): DataFrame = {
     // persisted pairs inside the helper: the symmetrized edge view is
     // consumed once per round
     val und = undirectedLsh(s, d)
@@ -253,15 +260,10 @@ object GraphAnalyticsQueries {
     var labels = und.select(col("a").as("node")).distinct()
       .withColumn("label", col("node"))
     // loop-INVARIANT shape choice, hoisted (r19 review): the gate's
-    // inputs (env override, memoized node bound) cannot change
-    // mid-query, and rounds must never pick different join shapes.
-    // SPARK_GRAFT_LPA_BCAST=0/1 overrides the gate (dev-only — the
-    // skew rehearsal A/Bs the two shapes on the same corpus).
-    val useBcast = sys.env.get("SPARK_GRAFT_LPA_BCAST") match {
-      case Some("0") => false
-      case Some("1") => true
-      case _ => lpaNodesUpperBound(s, d) <= LpaBroadcastMaxNodes
-    }
+    // input (the memoized node bound) cannot change mid-query, and
+    // rounds must never pick different join shapes.
+    val useBcast = broadcastLabels.getOrElse(
+      lpaNodesUpperBound(s, d) <= LpaBroadcastMaxNodes)
     for (i <- 1 to LpaIters) {
       // max(struct(c, -label)) = lexicographic argmax: highest count,
       // then smallest label — one aggregate, no per-node sort.
@@ -296,20 +298,6 @@ object GraphAnalyticsQueries {
       if (i < LpaIters && i % 2 == 0) labels = labels.localCheckpoint()
     }
     labels.select(col("node").as("doc_id"), col("label").as("community"))
-  }
-
-  /** Phase attribution for q_graph_communities (ScaleProbe `lpa`): the
-    * LSH pair generation is timed standalone cold; a cold full run's
-    * remainder is the 4 synchronous rounds (join + two aggregations +
-    * the cadence-2 localCheckpoint each). Dev-only.
-    */
-  private[graft] def lpaProbe(s: SparkSession, d: String): String = {
-    val Seq(full, pairs) = graft.ScaleProbe.coldStages(
-      () => graft.Scratch.releaseAll(),
-      "full" -> (() => communities(s, d).count()),
-      "pairs" -> (() => DedupQueries.minhash(s, d).count()))
-    f"full=${full._3}%.2fs (${full._2} nodes) pairs=${pairs._3}%.2fs (${pairs._2}) " +
-      f"rounds~=${full._3 - pairs._3}%.2fs over $LpaIters iters"
   }
 
   // Twin: unrolled chained CTEs (the pagerank precedent — no recursion,

@@ -374,9 +374,9 @@ object TextAnalyticsQueries {
   // sources — so once any source exceeds the small-group bound the
   // adaptive operator switches to the bucketed two-level form, which
   // fans a giant source across its doc_id buckets while producing
-  // bit-identical sums (measured: probe the `pack` ScaleProbe mode on a
-  // `scalegen --single-source` dir). Small corpora keep the 1-window
-  // plan, same as the twin's SQL.
+  // bit-identical sums (measured r11 on a `scalegen --single-source`
+  // dir; SCALE.md). Small corpora keep the 1-window plan, same as the
+  // twin's SQL.
   private val PackBudget = 512L
 
   private val packSeq: Q = (s, d) => {

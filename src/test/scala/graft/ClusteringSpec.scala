@@ -251,32 +251,10 @@ class ClusteringSpec extends SparkSpec {
       (i.toLong, Array.fill(4)(((i % 5) * 4.0 + rnd.nextGaussian())))
     }.toDF("vec_id", "scaled").persist()
     df.count()
-    def jobsOf(body: => Unit): Int = {
-      val sentinel = "clustering-spec-job-count-sentinel"
-      val jobs = new java.util.concurrent.atomic.AtomicInteger
-      val done = new java.util.concurrent.CountDownLatch(1)
-      val l = new org.apache.spark.scheduler.SparkListener {
-        override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-          if (Option(e.properties).exists(_.getProperty("spark.job.description") == sentinel))
-            done.countDown()
-          else jobs.incrementAndGet()
-      }
-      spark.sparkContext.addSparkListener(l)
-      try {
-        body
-        // listener events arrive in order: once the sentinel job is
-        // seen, every job `body` submitted has been counted
-        spark.sparkContext.setJobDescription(sentinel)
-        spark.range(1).count()
-        spark.sparkContext.setJobDescription(null)
-        assert(done.await(60, java.util.concurrent.TimeUnit.SECONDS))
-        jobs.get
-      } finally spark.sparkContext.removeSparkListener(l)
-    }
     val counts = for {
       (maxMicro, floor) <- Seq((4, 50000L), (40, 50000L), (12, 500L))
-    } yield jobsOf(GraphBuild.microCluster(df, "vec_id", "scaled",
-      maxMicro = maxMicro, sampleFloor = floor))
+    } yield Ledger.measure(spark)(GraphBuild.microCluster(df, "vec_id", "scaled",
+      maxMicro = maxMicro, sampleFloor = floor))._2.jobs
     assert(counts.forall(_ <= 3), s"jobs per training: $counts")
     assert(counts.distinct.size == 1, s"job count varies with k or path: $counts")
     df.unpersist()

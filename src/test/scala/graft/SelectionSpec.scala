@@ -108,4 +108,28 @@ class SelectionSpec extends SparkSpec {
     assert(agree * 10 >= planted.size * 9,
       s"only $agree/${planted.size} planted pairs share a community")
   }
+
+  test("communities: the broadcast and the shuffle-join round shapes give identical rows") {
+    // the node-bound gate always broadcasts at test scale, so force
+    // each shape; the fallback is what a corpus past the bound runs
+    def run(broadcastLabels: Boolean): (Seq[(Long, Long)], Ledger.Cost) = {
+      var rows = Seq.empty[(Long, Long)]
+      val (_, cost) = Ledger.measure(spark) {
+        val df = queries.GraphAnalyticsQueries
+          .lpaCommunities(spark, sf, Some(broadcastLabels))
+        rows = df.collect()
+          .map(r => r.getAs[Long]("doc_id") -> r.getAs[Long]("community")).toSeq.sorted
+        df
+      }
+      Scratch.release(spark)
+      (rows, cost)
+    }
+    val (bcast, bcastCost) = run(broadcastLabels = true)
+    val (shuffled, shuffledCost) = run(broadcastLabels = false)
+    assert(bcast.nonEmpty)
+    assert(shuffled == bcast)
+    // the fallback re-partitions every round's joined edges on a
+    assert(shuffledCost.exchanges > bcastCost.exchanges,
+      s"shapes not forced: $shuffledCost vs $bcastCost")
+  }
 }

@@ -78,8 +78,24 @@ def main():
                 "`—` = rows-only query (no SQL twin).\n\n")
         if bench_full.get("note"):
             f.write(f"Protocol note: {bench_full['note']}.\n\n")
-        f.write("| query | spark s | rep spread | duckdb s | ratio |\n"
-                "|---|---|---|---|---|\n")
+        # the Ledger counters of each entry's fastest rep, when the file
+        # carries them (older bench_merged_*.json files do not)
+        counters = ["jobs", "stages", "tasks", "shuffle_rw_bytes"]
+        has_counters = any("jobs" in st for st in stats.values())
+        cols = ["query", "spark s", "rep spread", "duckdb s", "ratio"]
+        if has_counters:
+            f.write("jobs / stages / tasks / shuffle bytes (read + "
+                    "written) are the Ledger counters of the fastest "
+                    "rep (`bench_out.json` `stats`).\n\n")
+            cols += ["jobs", "stages", "tasks", "shuffle bytes"]
+        f.write("| " + " | ".join(cols) + " |\n" + "|---" * len(cols) + "|\n")
+
+        def cost(name):
+            if not has_counters:
+                return ""
+            st = stats.get(name, {})
+            return "".join(f" {st[c]} |" if c in st else " — |"
+                           for c in counters)
 
         def spread(name):
             st = stats.get(name)
@@ -89,11 +105,12 @@ def main():
 
         for name, s, d in rows:
             if s < 0:
-                f.write(f"| {name} | FAILED | — | — | — |\n")
+                row = f"| {name} | FAILED | — | — | — |"
             elif d is None:
-                f.write(f"| {name} | {s:.2f} | {spread(name)} | — | — |\n")
+                row = f"| {name} | {s:.2f} | {spread(name)} | — | — |"
             else:
-                f.write(f"| {name} | {s:.2f} | {spread(name)} | {d:.3f} | {s/d:.1f}× |\n")
+                row = f"| {name} | {s:.2f} | {spread(name)} | {d:.3f} | {s/d:.1f}× |"
+            f.write(row + cost(name) + "\n")
         # denominator variance, measured inside THIS run: per-query
         # (max-min)/min across the interleaved DuckDB reps, plus the
         # worst-window total (sum of per-query max) vs the min total
@@ -146,15 +163,17 @@ def main():
   iterative GraphX machinery (Pregel supersteps / connected components)
   whose DuckDB twins are trivial SQL (a string split, a recursive CTE
   over a few hundred pairs), so the ratio reads 10-100x at bench SFs.
-  `runMain graft.ScaleProbe <dir> graphx` attributes it: Pregel on a
-  TWO-VERTEX graph costs ~0.27 s (pure framework floor — RDD
+  The r16 `ScaleProbe graphx` split (since deleted) attributed it:
+  Pregel on a TWO-VERTEX graph cost ~0.27 s (pure framework floor — RDD
   materialization, vertex/edge partitioning, per-superstep joins),
   against ~0.8 s for the full q_graphx_depth (10 supersteps) and
   ~0.6 s for q_dedup_cc — the queries sit on the per-superstep fixed
   cost, not on data work. That machinery is exactly what scales the
   operator across a cluster (the 117M-edge PageRank rehearsal in
   SCALE.md runs the same shape at 5x wall for 10x data); these two
-  entries are documented floor, not plan defects.
+  entries are documented floor, not plan defects. Their per-superstep
+  jobs, stages and tasks are in each entry's `stats` cost vector
+  (`SPARK_GRAFT_ONLY=q_graphx_depth,q_dedup_cc runMain graft.Bench`).
 - The I/O-ROUNDTRIP class (q_orc_roundtrip, o03_csv_roundtrip,
   q_json_roundtrip, o02_wholefile_roundtrip, o07_jdbc_roundtrip): each
   rep WRITES a sink (ORC/CSV/JSON/text/Derby — committer protocol,
