@@ -1,7 +1,6 @@
 package graft.operators
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.functions.VectorOps
@@ -108,14 +107,9 @@ object AnnHnsw {
       k: Int, nProbe: Int, efSearch: Int = 32): DataFrame = {
     val spark = ix.base.graph.sparkSession
     import spark.implicits._
-    val routed = probes
-      .select(col(probeId).cast("long").as("probe_id"),
-        VectorOps.toDoubleArr(col(probeVec)).as("pv"))
-      .crossJoin(broadcast(ix.base.centroids))
-      .withColumn("cdist", VectorOps.l2DistanceNative(col("pv"), col("centroid")))
-      .withColumn("crk", row_number().over(
-        Window.partitionBy("probe_id").orderBy(col("cdist"), col("cluster"))))
-      .filter(col("crk") <= nProbe)
+    val routed = AnnIvf.route(probes
+        .select(col(probeId).cast("long").as("probe_id"),
+          VectorOps.toDoubleArr(col(probeVec)).as("pv")), ix.base.centroids, nProbe)
       .select(col("cluster").cast("int"), col("probe_id"), col("pv"))
       .as[AnnNsw.ProbeRow]
     // one layered dataset: layer 0 = the base graph (carries e), upper
@@ -167,12 +161,7 @@ object AnnHnsw {
           }
         }
       }
-    hits.toDF()
-      .select(col("probe_id"), col("vec_id"),
-        (round(col("cos"), 6) + lit(0.0)).as("cos"))
-      .withColumn("rk", row_number().over(
-        Window.partitionBy("probe_id")
-          .orderBy(col("cos").desc, col("vec_id"))).cast("long"))
-      .filter(col("rk") <= k)
+    AnnIvf.cosTopK(hits.toDF(), Seq("probe_id"), "vec_id", col("cos"), k)
+      .withColumn("rk", col("rk").cast("long"))
   }
 }

@@ -65,7 +65,7 @@ object AnnIvf {
     */
   def buildIndex(emb: DataFrame, idCol: String, arrCol: String,
       nList: Int): IvfIndex = {
-    require(!Seq("e", "probe_id", "pv", "cluster").contains(idCol),
+    require(!Seq("e", "probe_id", "pv", "cluster", "crk").contains(idCol),
       s"idCol '$idCol' collides with an internal column name")
     val spark = emb.sparkSession
     import spark.implicits._
@@ -226,25 +226,43 @@ object AnnIvf {
       .agg(count(lit(1)).as("n"), sum(col("d_e6")).as("sum_dist_e6"))
       .withColumn("mean_dist_e6", expr("sum_dist_e6 DIV n"))
 
+  /** The IVF probe-routing rule, the one copy every list search uses:
+    * each probe row (`probe_id`, `pv` and any carried columns) scores
+    * the centroids (tiny, broadcast) by l2 distance and keeps its
+    * `nProbe` nearest lists as `cluster`, ranked `crk` 1..nProbe with
+    * ties going to the lower cluster id — the `(cdist, cluster)` order
+    * every DuckDB twin replays.
+    */
+  def route(probes: DataFrame, centroids: DataFrame, nProbe: Int): DataFrame =
+    probes.crossJoin(broadcast(centroids))
+      .withColumn("cdist", VectorOps.l2DistanceNative(col("pv"), col("centroid")))
+      .withColumn("crk", row_number().over(
+        Window.partitionBy("probe_id").orderBy(col("cdist"), col("cluster"))))
+      .filter(col("crk") <= nProbe)
+      .select((probes.columns.toSeq ++ Seq("cluster", "crk")).map(col): _*)
+
+  /** The cosine top-k rule, the one copy every ranked read uses: the raw
+    * cosine is rounded to 6 dp BEFORE ordering (`+ 0.0` folds DuckDB's
+    * −0.0), rows rank per `keys` by `cos DESC, idCol` (an INT `rk`,
+    * row_number's own type) and `rk <= k` survives. Returns `keys`,
+    * `idCol`, `cos`, `rk`; a caller that publishes `rk` casts it.
+    */
+  def cosTopK(rows: DataFrame, keys: Seq[String], idCol: String, cos: Column,
+      k: Int): DataFrame =
+    rows.select((keys :+ idCol).map(col) :+ (round(cos, 6) + lit(0.0)).as("cos"): _*)
+      .withColumn("rk", row_number().over(
+        Window.partitionBy(keys.map(col): _*).orderBy(col("cos").desc, col(idCol))))
+      .filter(col("rk") <= k)
+
   /** Cosine top-k per probe, scanning only the nProbe nearest lists. */
   def topK(index: IvfIndex, probes: DataFrame, probeId: String,
       probeVec: String, k: Int, nProbe: Int): DataFrame = {
     val p = probes.select(col(probeId).as("probe_id"),
       VectorOps.toDoubleArr(col(probeVec)).as("pv"))
-    // 1. probe × centroids (centroids are tiny → broadcast), keep nProbe
-    val lists = p.crossJoin(broadcast(index.centroids))
-      .withColumn("cdist", VectorOps.l2DistanceNative(col("pv"), col("centroid")))
-      .withColumn("crk", row_number().over(
-        Window.partitionBy("probe_id").orderBy(col("cdist"), col("cluster"))))
-      .filter(col("crk") <= nProbe)
-      .select("probe_id", "pv", "cluster")
-    // 2. equi-join on the list id — only the probed lists are scanned
-    lists.join(index.assigned, Seq("cluster"))
-      .select(col("probe_id"), col(index.idCol),
-        (round(VectorOps.cosineSimilarityNative(col("e"), col("pv")), 6) + lit(0.0)).as("cos"))
-      .withColumn("rk", row_number().over(
-        Window.partitionBy("probe_id")
-          .orderBy(col("cos").desc, col(index.idCol))).cast("long"))
-      .filter(col("rk") <= k)
+    // equi-join on the list id — only the probed lists are scanned
+    cosTopK(route(p, index.centroids, nProbe).join(index.assigned, Seq("cluster")),
+        Seq("probe_id"), index.idCol,
+        VectorOps.cosineSimilarityNative(col("e"), col("pv")), k)
+      .withColumn("rk", col("rk").cast("long"))
   }
 }

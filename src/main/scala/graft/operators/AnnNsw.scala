@@ -1,7 +1,6 @@
 package graft.operators
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.functions.VectorOps
@@ -145,15 +144,10 @@ object AnnNsw {
       k: Int, nProbe: Int, efSearch: Int = 32): DataFrame = {
     val spark = ix.graph.sparkSession
     import spark.implicits._
-    // route each probe to its nProbe nearest lists (same as AnnIvf)
-    val routed = probes
-      .select(col(probeId).cast("long").as("probe_id"),
-        VectorOps.toDoubleArr(col(probeVec)).as("pv"))
-      .crossJoin(broadcast(ix.centroids))
-      .withColumn("cdist", VectorOps.l2DistanceNative(col("pv"), col("centroid")))
-      .withColumn("crk", row_number().over(
-        Window.partitionBy("probe_id").orderBy(col("cdist"), col("cluster"))))
-      .filter(col("crk") <= nProbe)
+    // route each probe to its nProbe nearest lists (the AnnIvf rule)
+    val routed = AnnIvf.route(probes
+        .select(col(probeId).cast("long").as("probe_id"),
+          VectorOps.toDoubleArr(col(probeVec)).as("pv")), ix.centroids, nProbe)
       .select(col("cluster").cast("int"), col("probe_id"), col("pv"))
       .as[ProbeRow]
     val graphDS = ix.graph.as[GraphRow]
@@ -173,13 +167,8 @@ object AnnNsw {
           }
         }
       }
-    // merge lists per probe, exact IVF-style tie-break and ranking
-    hits.toDF()
-      .select(col("probe_id"), col("vec_id"),
-        (round(col("cos"), 6) + lit(0.0)).as("cos"))
-      .withColumn("rk", row_number().over(
-        Window.partitionBy("probe_id")
-          .orderBy(col("cos").desc, col("vec_id"))).cast("long"))
-      .filter(col("rk") <= k)
+    // merge lists per probe with the IVF ranking
+    AnnIvf.cosTopK(hits.toDF(), Seq("probe_id"), "vec_id", col("cos"), k)
+      .withColumn("rk", col("rk").cast("long"))
   }
 }

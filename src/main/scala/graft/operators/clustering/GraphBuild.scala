@@ -192,15 +192,29 @@ object GraphBuild {
   }
 
   /** E2 serving (graph_repo.py:92-135): immediate children of a node via
-    * the ltree `path ~ 'p.*{1}'` equivalent — prefix + depth predicates,
-    * both pushable string filters.
+    * the ltree `path ~ 'p.*{1}'` equivalent — prefix + depth predicates.
+    *
+    * Runs ONE job to read the parent row (a `collect` of the id point
+    * filter; none over an in-memory tree such as a build's). The children
+    * are then one filter carrying the parent's path and depth as
+    * literals: a depth-partitioned table prunes its scan to the
+    * `depth = parent + 1` directory, and an in-memory tree plans to a
+    * `LocalTableScan`, which collects on the driver with no job.
+    *
+    * The rows are those of the join `child.path LIKE parent.path || '.%'
+    * AND child.depth = parent.depth + 1`:
+    *  - an unknown id gives no rows, with the same schema;
+    *  - a parent with a NULL path or depth has no children;
+    *  - a duplicated id gives one filter per parent row, unioned, so a
+    *    child two parent rows match appears twice, as the join has it.
     */
   def childrenOf(graph: DataFrame, nodeId: Long): DataFrame = {
-    val parent = graph.filter(col("id") === nodeId)
-      .select(col("path").as("ppath"), col("depth").as("pdepth"))
-    graph.join(broadcast(parent),
-        col("path").startsWith(concat(col("ppath"), lit("."))) &&
-          col("depth") === col("pdepth") + 1)
-      .select("id", "path", "name", "type", "children_count", "count")
+    val out = Seq("id", "path", "name", "type", "children_count", "count").map(col)
+    graph.filter(col("id") === nodeId).select("path", "depth").collect()
+      .map(p => graph.filter(col("depth") === lit(p.get(1)) + 1 &&
+          col("path").startsWith(concat(lit(p.get(0)), lit("."))))
+        .select(out: _*))
+      .reduceOption(_ union _)
+      .getOrElse(graph.filter(lit(false)).select(out: _*))
   }
 }

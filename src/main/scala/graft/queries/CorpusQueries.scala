@@ -893,14 +893,9 @@ object CorpusQueries {
       .select(col("vec_id"), toDoubleArr(col("embedding")).as("e"))
     val pv = emb.filter(col("vec_id") < Bm25Probes)
       .select(col("vec_id").as("probe_id"), col("e").as("pv"))
-    val vec = emb.crossJoin(broadcast(pv))
-      .select(col("probe_id"), col("vec_id").as("doc_id"),
-        (round(cosineSimilarityNative(col("e"), col("pv")), 6) + lit(0.0)).as("cos"))
-      .withColumn("rkv", row_number().over(
-        Window.partitionBy("probe_id").orderBy(col("cos").desc, col("doc_id")))
-        .cast("long"))
-      .filter(col("rkv") <= FusionDepth)
-      .select("probe_id", "doc_id", "rkv")
+    val vec = graft.operators.AnnIvf.cosTopK(emb.crossJoin(broadcast(pv)),
+        Seq("probe_id"), "vec_id", cosineSimilarityNative(col("e"), col("pv")), FusionDepth)
+      .select(col("probe_id"), col("vec_id").as("doc_id"), col("rk").cast("long").as("rkv"))
     rrfFuse(lexLeg(s, d), vec)
   }
 

@@ -92,13 +92,10 @@ object GraphQueries {
     * children filter carries a LITERAL depth so Catalyst prunes to the
     * `depth=parent+1` partition — asserted in PlanSpec.
     */
-  private val e2Pruned: Q = (s, d) => {
-    val g = s.read.parquet(depthTable(s, d))
-    val p = g.filter(col("id") === 3L).select("path", "depth").head()
-    g.filter(col("depth") === (p.getAs[Number]("depth").longValue() + 1) &&
-        col("path").startsWith(p.getAs[String]("path") + "."))
-      .select(col("id"), col("path"), col("name"), col("type"), col("children_count"))
-  }
+  private val e2Pruned: Q = (s, d) =>
+    GraphBuild.childrenOf(
+      s.read.parquet(depthTable(s, d)).withColumn("count", lit(0L)), nodeId = 3L)
+      .drop("count")
 
   /** E3: movie + its embedding windows (api/api.py:62-74;
     * graph_repo.py:183-199) — point filter, broadcast 1:N join, vectors
@@ -490,6 +487,7 @@ object GraphQueries {
       // the ivfIndex/nswIndex export pattern
       writeKmeansExports(s, bt)
       writePreTree(s, bt.preRows, preTreePath)
+      writeGraphExport(bt.graph)
       bt
     }
 
@@ -532,26 +530,11 @@ object GraphQueries {
   private def graphExportPath: String = java.nio.file.Paths
     .get(sys.props("java.io.tmpdir"), "graft_graph_export").toString
 
-  /** E2 on the REAL built tree: children of the root.
-    *
-    * Graduated from rows-only in r10 (VERDICT r9 #6) by re-deriving the
-    * §5.4 fence boundary: what is NOT SQL-replayable is the KMeans
-    * centroid geometry; the TREE itself is deterministic data once
-    * built, and the SERVING semantics over it are plain relational
-    * logic. So the query exports the built tree as data — nodes plus a
-    * (child, parent) edge list derived by a SELF-JOIN on the stripped
-    * parent path — and the oracle recomputes children-of-root from the
-    * export with a DuckDB RECURSIVE CTE over the edges, level 1. The
-    * two sides take genuinely different routes to the same rows: Spark
-    * serves via the ltree prefix-match + depth predicate
-    * ([[GraphBuild.childrenOf]]); DuckDB walks parent_id edges that
-    * never look at the path prefix. A bug in either the path
-    * materialization, the edge derivation, or the serving predicate
-    * flips the hash. Only the centroid half (o51_kmeans, q_graph_build's
-    * distance column) remains fenced.
+  /** The built tree as data for the q_graph_children oracle: nodes plus
+    * a (child, parent) edge list derived by a SELF-JOIN on the stripped
+    * parent path. Written once per build, with the other exports.
     */
-  private val buildChildren: Q = (s, d) => {
-    val g = built(s, d).graph
+  private def writeGraphExport(g: DataFrame): Unit = {
     val parents = g.select(col("path").as("_ppath"), col("id").as("parent_id"))
     val edges = g.filter(col("id") =!= 1L)
       .withColumn("_parent_path", regexp_replace(col("path"), "\\.[0-9]+$", ""))
@@ -562,8 +545,26 @@ object GraphQueries {
         col("children_count"), col("depth"), col("count"),
         coalesce(col("parent_id"), lit(0L)).as("parent_id"))
       .coalesce(1).write.mode("overwrite").parquet(graphExportPath)
-    GraphBuild.childrenOf(g, 1L)
   }
+
+  /** E2 on the REAL built tree: children of the root.
+    *
+    * Graduated from rows-only in r10 (VERDICT r9 #6) by re-deriving the
+    * §5.4 fence boundary: what is NOT SQL-replayable is the KMeans
+    * centroid geometry; the TREE itself is deterministic data once
+    * built, and the SERVING semantics over it are plain relational
+    * logic. So the build memo exports the tree as data
+    * ([[writeGraphExport]]) and the oracle recomputes children-of-root
+    * from the export with a DuckDB RECURSIVE CTE over the edges, level
+    * 1. The two sides take genuinely different routes to the same rows:
+    * Spark serves via the ltree prefix-match + depth predicate
+    * ([[GraphBuild.childrenOf]]); DuckDB walks parent_id edges that
+    * never look at the path prefix. A bug in either the path
+    * materialization, the edge derivation, or the serving predicate
+    * flips the hash. Only the centroid half (o51_kmeans, q_graph_build's
+    * distance column) remains fenced.
+    */
+  private val buildChildren: Q = (s, d) => GraphBuild.childrenOf(built(s, d).graph, 1L)
 
   private def buildChildrenSql: String =
     s"""WITH RECURSIVE nodes AS (

@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 
 import graft.Tables
 import graft.functions.VectorOps._
+import graft.operators.AnnIvf
 
 /** Vector / similarity-search / eval pack (O-54, O-56, O-37, O-12, O-41)
   * over `embeddings` (ARRAY<FLOAT> ×64) and `documents`.
@@ -49,13 +50,9 @@ object VectorQueries {
   private val o56: Q = (s, d) => {
     val probes = emb(s, d).filter(col("vec_id") < 5)
       .select(col("vec_id").as("probe_id"), col("e").as("pv"))
-    emb(s, d).crossJoin(broadcast(probes))
-      .select(col("probe_id"), col("vec_id"),
-        (round(cosineSimilarityNative(col("e"), col("pv")), 6) + lit(0.0)).as("cos"))
-      .withColumn("rk", row_number().over(
-        Window.partitionBy("probe_id").orderBy(col("cos").desc, col("vec_id"))).cast("long"))
-      .filter(col("rk") <= 10)
-      .select("probe_id", "rk", "vec_id", "cos")
+    AnnIvf.cosTopK(emb(s, d).crossJoin(broadcast(probes)), Seq("probe_id"), "vec_id",
+        cosineSimilarityNative(col("e"), col("pv")), 10)
+      .select(col("probe_id"), col("rk").cast("long").as("rk"), col("vec_id"), col("cos"))
   }
 
   /** O-37: per-cluster centroid (graph_creator.py:345-347), long form. */
@@ -98,7 +95,7 @@ object VectorQueries {
   /** IVF ANN (oracle-checked since r12 via the centroid export — the
     * trained quantizer is deterministic data, and everything downstream
     * of it is replayable arithmetic): probe 4 of the
-    * auto-sized inverted lists ([[graft.operators.AnnIvf.autoNList]]:
+    * auto-sized inverted lists ([[AnnIvf.autoNList]]:
     * constant ~500-vector list length, floor 16 — bench SFs stay at the
     * historical nList=16) — the 100 TB scale path where the corpus scan
     * is cut to nProbe/nList. Exactness at nProbe == nList is asserted
@@ -107,7 +104,7 @@ object VectorQueries {
   // index built once per data dir (an index is a persistent artifact, not
   // per-query work — a user would build it once and query many times)
   private val ivfCache = graft.SessionCache
-    .artifact[graft.operators.AnnIvf.IvfIndex]("ivf_index")(_.assigned.unpersist())
+    .artifact[AnnIvf.IvfIndex]("ivf_index")(_.assigned.unpersist())
   private val nswCache = graft.SessionCache
     .artifact[graft.operators.AnnNsw.NswIndex]("nsw_graph")(_.graph.unpersist())
 
@@ -131,11 +128,11 @@ object VectorQueries {
     * (re)writes the centroid export the q_ann_ivf oracle replays —
     * trivially small (nList rows) and memoized with the index itself.
     */
-  private[graft] def ivfIndex(s: SparkSession, d: String): graft.operators.AnnIvf.IvfIndex = {
+  private[graft] def ivfIndex(s: SparkSession, d: String): AnnIvf.IvfIndex = {
     val embT = Tables.embeddings(s, d)
     ivfCache.getOrElseUpdate(s, d) {
-      val ix = graft.operators.AnnIvf.buildIndex(embT, "vec_id", "embedding",
-        nList = graft.operators.AnnIvf.autoNList(embT.count()))
+      val ix = AnnIvf.buildIndex(embT, "vec_id", "embedding",
+        nList = AnnIvf.autoNList(embT.count()))
       ix.centroids.write.mode("overwrite").parquet(ivfExportPath)
       ix
     }
@@ -380,10 +377,10 @@ object VectorQueries {
     * persisted index (r17, VERDICT r16 #1).
     */
   private[graft] def ivfTopkFrom(s: SparkSession, d: String,
-      index: graft.operators.AnnIvf.IvfIndex): DataFrame = {
+      index: AnnIvf.IvfIndex): DataFrame = {
     val probes = Tables.embeddings(s, d).filter(col("vec_id") < 5)
       .select(col("vec_id").as("pid"), col("embedding"))
-    graft.operators.AnnIvf.topK(index, probes, "pid", "embedding", k = 10, nProbe = 4)
+    AnnIvf.topK(index, probes, "pid", "embedding", k = 10, nProbe = 4)
   }
 
   private val ivf: Q = (s, d) => ivfTopkFrom(s, d, ivfIndex(s, d))
@@ -415,21 +412,12 @@ object VectorQueries {
     val index = ivfIndex(s, d)
     val p = Tables.embeddings(s, d).filter(col("vec_id") < ContrastiveProbes)
       .select(col("vec_id").as("probe_id"), toDoubleArr(col("embedding")).as("pv"))
-    val lists = p.crossJoin(broadcast(index.centroids))
-      .withColumn("cdist", l2DistanceNative(col("pv"), col("centroid")))
-      .withColumn("crk", row_number().over(
-        Window.partitionBy("probe_id").orderBy(col("cdist"), col("cluster"))))
-      .filter(col("crk") <= 2)
-      .select(col("probe_id"), col("pv"), col("cluster"), col("crk"))
     // scratch-persisted: both triplet legs filter this frame — the twin
     // MATERIALIZEs its `ranked` for the same reason
-    val ranked = graft.Scratch.persist(lists.join(index.assigned, Seq("cluster"))
-      .filter(col("vec_id") =!= col("probe_id"))
-      .select(col("probe_id"), col("crk"), col("vec_id"),
-        (round(cosineSimilarityNative(col("e"), col("pv")), 6) + lit(0.0)).as("cos"))
-      .withColumn("rk", row_number().over(
-        Window.partitionBy("probe_id", "crk").orderBy(col("cos").desc, col("vec_id"))))
-      .filter(col("rk") === 1))
+    val ranked = graft.Scratch.persist(AnnIvf.cosTopK(
+      AnnIvf.route(p, index.centroids, 2).join(index.assigned, Seq("cluster"))
+        .filter(col("vec_id") =!= col("probe_id")),
+      Seq("probe_id", "crk"), "vec_id", cosineSimilarityNative(col("e"), col("pv")), 1))
     val pos = ranked.filter(col("crk") === 1)
       .select(col("probe_id"), col("vec_id").as("pos_id"), col("cos").as("pos_cos"))
     val neg = ranked.filter(col("crk") === 2)
@@ -460,21 +448,15 @@ object VectorQueries {
     val p = emb(s, d).filter(pmod(col("vec_id"), lit(KnnProbeMod)) === 0)
       .select(col("vec_id").as("probe_id"),
         col("label").cast("long").as("truth"), col("e").as("pv"))
-    val lists = p.crossJoin(broadcast(index.centroids))
-      .withColumn("cdist", l2DistanceNative(col("pv"), col("centroid")))
-      .withColumn("crk", row_number().over(
-        Window.partitionBy("probe_id").orderBy(col("cdist"), col("cluster"))))
-      .filter(col("crk") <= KnnNProbe)
-      .select("probe_id", "truth", "pv", "cluster")
     val labs = Tables.embeddings(s, d)
       .select(col("vec_id"), col("label").cast("long").as("nlabel"))
-    lists.join(index.assigned, Seq("cluster"))
-      .filter(col("vec_id") =!= col("probe_id")) // leave-one-out
-      .select(col("probe_id"), col("truth"), col("vec_id"),
-        (round(cosineSimilarityNative(col("e"), col("pv")), 6) + lit(0.0)).as("cos"))
-      .withColumn("rk", row_number().over(
-        Window.partitionBy("probe_id").orderBy(col("cos").desc, col("vec_id"))))
-      .filter(col("rk") <= KnnK)
+    // truth is a per-probe attribute: partitioning by (probe_id, truth)
+    // ranks exactly the probe_id partitions
+    AnnIvf.cosTopK(
+        AnnIvf.route(p, index.centroids, KnnNProbe).join(index.assigned, Seq("cluster"))
+          .filter(col("vec_id") =!= col("probe_id")), // leave-one-out
+        Seq("probe_id", "truth"), "vec_id",
+        cosineSimilarityNative(col("e"), col("pv")), KnnK)
       .join(labs, Seq("vec_id"))
       .groupBy(col("probe_id"), col("truth"), col("nlabel"))
       .agg(count(lit(1)).as("votes"))
@@ -502,12 +484,8 @@ object VectorQueries {
 
   /** Exact cosine top-k ids per probe over (probe_id, pv) × (vec_id, e). */
   private def exactTopK(vecs: DataFrame, probes: DataFrame): DataFrame =
-    vecs.crossJoin(broadcast(probes))
-      .select(col("probe_id"), col("vec_id"),
-        (round(cosineSimilarityNative(col("e"), col("pv")), 6) + lit(0.0)).as("cos"))
-      .withColumn("rk", row_number().over(
-        Window.partitionBy("probe_id").orderBy(col("cos").desc, col("vec_id"))))
-      .filter(col("rk") <= RecallK)
+    AnnIvf.cosTopK(vecs.crossJoin(broadcast(probes)), Seq("probe_id"), "vec_id",
+        cosineSimilarityNative(col("e"), col("pv")), RecallK)
       .select("probe_id", "vec_id")
 
   private val annRecall: Q = (s, d) => {
@@ -522,12 +500,8 @@ object VectorQueries {
     def lshTop(masks: Seq[Int], mode: String): DataFrame = {
       val pr = probes.select(col("probe_id"), col("pv"),
         explode(array(masks.map(m => col("pb").bitwiseXOR(lit(m))): _*)).as("pbucket"))
-      broadcast(pr).join(bk, col("pbucket") === col("bucket"))
-        .select(col("probe_id"), col("vec_id"),
-          (round(cosineSimilarityNative(col("e"), col("pv")), 6) + lit(0.0)).as("cos"))
-        .withColumn("rk", row_number().over(
-          Window.partitionBy("probe_id").orderBy(col("cos").desc, col("vec_id"))))
-        .filter(col("rk") <= RecallK)
+      AnnIvf.cosTopK(broadcast(pr).join(bk, col("pbucket") === col("bucket")),
+          Seq("probe_id"), "vec_id", cosineSimilarityNative(col("e"), col("pv")), RecallK)
         .select(lit(mode).as("mode"), col("probe_id"), col("vec_id"))
     }
     val lsh = lshTop(Seq(0), "lsh1")
@@ -554,7 +528,7 @@ object VectorQueries {
       emb(s, d).filter(col("vec_id") < RecallProbes)
         .select(col("vec_id").as("probe_id"), col("e").as("pv")))
     def rec(nProbe: Int): DataFrame =
-      graft.operators.AnnIvf.topK(index, probes, "pid", "embedding", RecallK, nProbe)
+      AnnIvf.topK(index, probes, "pid", "embedding", RecallK, nProbe)
         .select(lit(nProbe).cast("long").as("n_probe"),
           col("probe_id"), col("vec_id"))
     // probe a constant FRACTION of the lists (quarter + all), not a
@@ -595,8 +569,7 @@ object VectorQueries {
       val walked = graft.operators.AnnNsw
         .topK(nsw, probes, "pid", "embedding", RecallK, nProbe)
         .select(col("probe_id"), col("vec_id"))
-      val scanned = graft.operators.AnnIvf
-        .topK(index, probes, "pid", "embedding", RecallK, nProbe)
+      val scanned = AnnIvf.topK(index, probes, "pid", "embedding", RecallK, nProbe)
         .select(col("probe_id"), col("vec_id"))
       // left joins from the probe list: a probe whose walk found no
       // exact/scan hits must still appear, at recall 0
@@ -676,10 +649,10 @@ object VectorQueries {
   private val ivfUpsert: Q = (s, d) => {
     val index = ivfIndex(s, d)
     val appended = upsertAppended(s, d)
-    val upserted = graft.operators.AnnIvf.appendToIndex(index, appended, "embedding")
+    val upserted = AnnIvf.appendToIndex(index, appended, "embedding")
     val probes = appended.filter(col("vec_id") < 200020L)
       .select(col("vec_id").as("pid"), col("embedding"))
-    graft.operators.AnnIvf.topK(upserted, probes, "pid", "embedding",
+    AnnIvf.topK(upserted, probes, "pid", "embedding",
       k = 3, nProbe = upserted.centroids.count().toInt)
       .select("probe_id", "rk", "vec_id", "cos")
   }
@@ -694,8 +667,8 @@ object VectorQueries {
   // sum); one broadcast join over the memoized lists + the delta's
   // assignment pass, no corpus re-scan.
   private val annDrift: Q = (s, d) =>
-    graft.operators.AnnIvf.assignDriftExact(
-      graft.operators.AnnIvf.appendToIndex(
+    AnnIvf.assignDriftExact(
+      AnnIvf.appendToIndex(
         ivfIndex(s, d), upsertAppended(s, d), "embedding"))
 
   // ---- MMR diversified re-rank ----
@@ -810,27 +783,18 @@ object VectorQueries {
   private[graft] val BitextK = 8
   private[graft] val BitextNProbe = 4
 
-  /** Positive-cos in-list top-k — the [[graft.operators.AnnIvf.topK]]
-    * shape with the positivity filter applied BEFORE ranking (both
-    * mining directions share it; the twin replays it verbatim).
+  /** Positive-cos in-list top-k — the [[AnnIvf.topK]] shape keeping
+    * only `cos > 0` (both mining directions share it). The twin filters
+    * before ranking, this side after: every positive row ranks ahead of
+    * every non-positive one under `cos DESC`, so the positive rows and
+    * their ranks are the same either way.
     */
   private def listTopkPos(assigned: DataFrame, cents: DataFrame,
-      probes: DataFrame): DataFrame = {
-    val lists = probes.crossJoin(broadcast(cents))
-      .withColumn("cdist", l2DistanceNative(col("pv"), col("centroid")))
-      .withColumn("crk", row_number().over(
-        Window.partitionBy("probe_id").orderBy(col("cdist"), col("cluster"))))
-      .filter(col("crk") <= BitextNProbe)
-      .select("probe_id", "pv", "cluster")
-    lists.join(assigned, Seq("cluster"))
-      .select(col("probe_id"), col("vec_id"),
-        (round(cosineSimilarityNative(col("e"), col("pv")), 6) + lit(0.0)).as("cos"))
+      probes: DataFrame): DataFrame =
+    AnnIvf.cosTopK(AnnIvf.route(probes, cents, BitextNProbe).join(assigned, Seq("cluster")),
+        Seq("probe_id"), "vec_id", cosineSimilarityNative(col("e"), col("pv")), BitextK)
       .filter(col("cos") > 0)
-      .withColumn("rk", row_number().over(
-        Window.partitionBy("probe_id").orderBy(col("cos").desc, col("vec_id"))))
-      .filter(col("rk") <= BitextK)
       .withColumn("cos_e6", expr("CAST(round(cos * 1000000) AS BIGINT)"))
-  }
 
   private val bitextMine: Q = (s, d) => {
     val index = ivfIndex(s, d)
@@ -839,7 +803,7 @@ object VectorQueries {
     // persisted: feeds the forward candidate join AND the reverse
     // probes' vector lookup
     val dass = graft.Scratch.persist(
-      graft.operators.AnnIvf.assignNearest(demb, "vec_id", index.centroids))
+      AnnIvf.assignNearest(demb, "vec_id", index.centroids))
     val probes = emb(s, d).filter(col("vec_id") < BitextProbes)
       .select(col("vec_id").as("probe_id"), col("e").as("pv"))
     // persisted: fwd feeds its own stats, the reverse probe set, and

@@ -1,7 +1,9 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
+import graft.operators.AnnIvf
 import graft.operators.clustering.{GraphBuild, TreeOps, Ward}
 
 class ClusteringSpec extends SparkSpec {
@@ -283,5 +285,113 @@ class ClusteringSpec extends SparkSpec {
     val tot = sil.map(r => r.getAs[Long]("mean_sbp") * r.getAs[Long]("n")).sum
     val n = sil.map(_.getAs[Long]("n")).sum
     assert(tot / n > 1000L, s"corpus mean silhouette ${tot / n} bp looks degenerate")
+  }
+
+  /** The reference for [[GraphBuild.childrenOf]]: its former body, a
+    * broadcast join of the graph against the parent row on the ltree
+    * prefix + depth predicate.
+    */
+  private def childrenJoin(graph: DataFrame, nodeId: Long): DataFrame = {
+    val parent = graph.filter(col("id") === nodeId)
+      .select(col("path").as("ppath"), col("depth").as("pdepth"))
+    graph.join(broadcast(parent),
+        col("path").startsWith(concat(col("ppath"), lit("."))) &&
+          col("depth") === col("pdepth") + 1)
+      .select("id", "path", "name", "type", "children_count", "count")
+  }
+
+  /** Same column names and types, and the same rows as a multiset. */
+  private def assertSameChildren(graph: DataFrame, id: Long): Unit = {
+    val got = GraphBuild.childrenOf(graph, id)
+    val want = childrenJoin(graph, id)
+    assert(got.schema.map(f => (f.name, f.dataType)) ==
+      want.schema.map(f => (f.name, f.dataType)), s"schema differs for id $id")
+    def rows(df: DataFrame) = df.collect().map(_.toSeq.mkString("|")).sorted.toSeq
+    assert(rows(got) == rows(want), s"children of id $id differ from the join")
+  }
+
+  /** A built tree's graph (an in-memory relation), build caches released. */
+  private def blobTree(): DataFrame = {
+    val rnd = new scala.util.Random(5)
+    val rows = (0 until 150).map { i =>
+      (i.toLong, Array.fill(6)(((i % 4) * 9.0 + rnd.nextGaussian()).toFloat))
+    }
+    val t = GraphBuild.build(rows.toDF("vec_id", "embedding"), "vec_id", "embedding",
+      maxMicro = 24)
+    t.persisted.foreach(_.unpersist())
+    t.graph
+  }
+
+  test("childrenOf equals the join form on every node of o07 and of a built tree") {
+    val o07 = SparkEntry.queries("o07_graph_ids")(spark, "/root/testdata/sf0.001")
+      .withColumn("count", lit(0L)).persist()
+    val tree = blobTree()
+    for (g <- Seq(o07, tree)) {
+      val ids = g.select("id").as[Long].collect()
+      assert(ids.length > 5 && g.filter(col("children_count") > 0).count() > 1)
+      // every node, plus ids the graph does not hold
+      (ids ++ Seq(0L, -1L, ids.max + 1)).foreach(assertSameChildren(g, _))
+    }
+    // an unknown id: no rows, the join's schema
+    val none = GraphBuild.childrenOf(tree, 999999L)
+    assert(none.collect().isEmpty)
+    assert(none.schema == childrenJoin(tree, 999999L).schema)
+    o07.unpersist()
+  }
+
+  test("childrenOf: NULL path or depth has no children; duplicate ids match the join") {
+    val g = Seq[(Long, String, Option[Int])](
+      (1L, "root", Some(0)),
+      (2L, "root.2", Some(1)),
+      (3L, "root.3", Some(1)),
+      (4L, "root.2.4", Some(2)),
+      // a NULL path: "null.6" would match if the NULL became a string
+      (5L, null, Some(1)),
+      (6L, "null.6", Some(2)),
+      // a NULL depth: 8 would match if the NULL became 0
+      (7L, "root.7", None),
+      (8L, "root.7.8", Some(1)),
+      // id 9 twice with one path: the join returns 4 twice
+      (9L, "root.2", Some(1)),
+      (9L, "root.2", Some(1)),
+      // id 10 twice with two paths: children of both rows
+      (10L, "root", Some(0)),
+      (10L, "root.3", Some(1)),
+      (11L, "root.3.11", Some(2))
+    ).toDF("id", "path", "depth")
+      .select(col("id"), col("path"), lit("n").as("name"), lit("node").as("type"),
+        lit(0).as("children_count"), col("depth"), lit(0L).as("count"))
+    assert(GraphBuild.childrenOf(g, 5L).collect().isEmpty)
+    assert(GraphBuild.childrenOf(g, 7L).collect().isEmpty)
+    assert(GraphBuild.childrenOf(g, 9L).collect().map(_.getAs[Long]("id")).toSeq == Seq(4L, 4L))
+    Seq(1L, 2L, 3L, 5L, 7L, 9L, 10L, 12L).foreach(assertSameChildren(g, _))
+  }
+
+  test("childrenOf over a build's in-memory tree runs no Spark job") {
+    val g = blobTree()
+    val (kids, cost) = Ledger.measure(spark)(GraphBuild.childrenOf(g, 1L).collect())
+    assert(kids.nonEmpty)
+    assert(cost.jobs == 0, s"childrenOf ran ${cost.jobs} jobs over a LocalRelation")
+  }
+
+  test("route sends equidistant lists to the lower cluster id first; cosTopK ties on id") {
+    // probe at the origin: clusters 3 and 1 are both at distance 1,
+    // cluster 0 at distance 5; the rows arrive in descending id order
+    val cents = Seq((3, Seq(1.0, 0.0)), (1, Seq(-1.0, 0.0)), (0, Seq(0.0, 5.0)))
+      .toDF("cluster", "centroid")
+    val probes = Seq((7L, Seq(0.0, 0.0), 42L)).toDF("probe_id", "pv", "truth")
+    def routed(n: Int) = AnnIvf.route(probes, cents, n).orderBy("crk")
+      .select("cluster", "crk", "truth").as[(Int, Int, Long)].collect().toSeq
+    assert(routed(1) == Seq((1, 1, 42L)))
+    assert(routed(2) == Seq((1, 1, 42L), (3, 2, 42L)))
+    assert(routed(3) == Seq((1, 1, 42L), (3, 2, 42L), (0, 3, 42L)))
+    // three candidates with equal cosine to the probe: ranks follow id
+    val pairs = Seq((7L, 30L, Seq(2.0, 0.0)), (7L, 10L, Seq(1.0, 0.0)),
+        (7L, 20L, Seq(3.0, 0.0)), (7L, 40L, Seq(0.0, 1.0)))
+      .toDF("probe_id", "vec_id", "e").withColumn("pv", array(lit(1.0), lit(0.0)))
+    val top = AnnIvf.cosTopK(pairs, Seq("probe_id"), "vec_id",
+        graft.functions.VectorOps.cosineSimilarityNative(col("e"), col("pv")), 2)
+      .orderBy("rk").select("vec_id", "cos", "rk").as[(Long, Double, Int)].collect().toSeq
+    assert(top == Seq((10L, 1.0, 1), (20L, 1.0, 2)))
   }
 }

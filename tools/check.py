@@ -4,6 +4,13 @@ not part of the engine). Runs each oracle SQL in DuckDB against the same
 parquet tables and compares rows/schema/hash with the Verify dump.
 
 Usage: python3 tools/check.py <sfDir> <verifyOutDir> [query ...]
+       python3 tools/check.py --same-as <otherVerifyOut> <verifyOutDir> [query ...]
+
+--same-as compares two Verify dumps instead (for a change that must
+leave every output as it was): each query dir, rows-only ones included,
+must have the same column names, DuckDB types and exact row hash (rows
+and columns sorted, floats by repr). Every query that differs or is on
+one side only is named; oracle_sql.json is compared byte for byte.
 """
 import glob
 import hashlib
@@ -36,7 +43,72 @@ def table_hash(rows, cols):
     return h.hexdigest()
 
 
+def query_dirs(out_dir):
+    return {q.rstrip("/").split("/")[-1]: q
+            for q in glob.glob(f"{out_dir}/*/")}
+
+
+def signature(con, qdir):
+    """(column names + DuckDB types, row count, exact row hash) of a dump."""
+    src = f"'{qdir}/*.parquet'"
+    try:
+        types = [(r[0], r[1]) for r in
+                 con.execute(f"DESCRIBE SELECT * FROM {src}").fetchall()]
+        rows = con.execute(f"SELECT * FROM {src}").fetchall()
+    except Exception as e:
+        return ("ERR", str(e).replace(qdir, "<dir>")[:200])
+    cols = [c for c, _ in types]
+    order = sorted(range(len(cols)), key=lambda i: cols[i])
+    lines = sorted("|".join("NULL" if r[i] is None else repr(r[i])
+                            for i in order) for r in rows)
+    h = hashlib.sha256("\n".join(lines).encode()).hexdigest()
+    return (sorted(types), len(rows), h)
+
+
+def same_as(other_dir, out_dir, only):
+    con = duckdb.connect()
+    mine, theirs = query_dirs(out_dir), query_dirs(other_dir)
+    names = sorted(set(mine) | set(theirs))
+    n_same = n_diff = 0
+    for name in names:
+        if only and name not in only:
+            continue
+        if name not in mine or name not in theirs:
+            n_diff += 1
+            side = out_dir if name in mine else other_dir
+            print(f"{name:28s} DIFF only in {side}")
+            continue
+        a, b = signature(con, mine[name]), signature(con, theirs[name])
+        if a == b:
+            n_same += 1
+            continue
+        n_diff += 1
+        if a[0] == "ERR" or b[0] == "ERR":
+            print(f"{name:28s} DIFF read: {a[1] if a[0] == 'ERR' else 'ok'} / "
+                  f"{b[1] if b[0] == 'ERR' else 'ok'}")
+        elif a[0] != b[0]:
+            print(f"{name:28s} DIFF columns: {a[0]} / {b[0]}")
+        else:
+            print(f"{name:28s} DIFF rows={a[1]}/{b[1]} hash differs")
+    with open(f"{out_dir}/oracle_sql.json", "rb") as f:
+        o_mine = f.read()
+    with open(f"{other_dir}/oracle_sql.json", "rb") as f:
+        o_theirs = f.read()
+    if o_mine == o_theirs:
+        print("oracle_sql.json identical")
+    else:
+        a, b = json.loads(o_mine), json.loads(o_theirs)
+        changed = sorted(k for k in set(a) | set(b) if a.get(k) != b.get(k))
+        print(f"oracle_sql.json DIFF ({len(changed)} queries): "
+              f"{', '.join(changed)[:400]}")
+        n_diff += 1
+    print(f"== {n_same} identical / {n_diff} differ ==")
+    sys.exit(1 if n_diff else 0)
+
+
 def main():
+    if sys.argv[1] == "--same-as":
+        return same_as(sys.argv[2], sys.argv[3], set(sys.argv[4:]))
     sf_dir, out_dir = sys.argv[1], sys.argv[2]
     only = set(sys.argv[3:])
     with open(f"{out_dir}/oracle_sql.json") as f:
