@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.functions._
 
 /** Catalog-style table statistics, memoized per (session, dir#key).
   *
@@ -24,4 +25,17 @@ object Stats {
     */
   def scalar(s: SparkSession, dir: String, key: String)(compute: => Long): Long =
     cache.getOrElseUpdate(s, s"$dir#$key")(compute)
+
+  // Statistics more than one query reads are declared once here, so
+  // every reader shares one key and one computation.
+
+  /** Rows of `documents`. */
+  def documentCount(s: SparkSession, dir: String): Long =
+    scalar(s, dir, "documents:count")(Tables.documents(s, dir).count())
+
+  /** The most `documents` rows sharing one `source` (0 when empty). */
+  def sourceMaxGroup(s: SparkSession, dir: String): Long =
+    scalar(s, dir, "documents.source:maxGroup")(
+      Tables.documents(s, dir).select(col("source")).groupBy("source").count()
+        .agg(coalesce(max(col("count")), lit(0L))).head().getLong(0))
 }

@@ -37,14 +37,23 @@ object VectorOps {
   /** O-54 Euclidean distance (graph_creator.py:350). */
   def l2Distance(a: Column, b: Column): Column =
     sqrt(aggregate(zip_with(a, b, (x, y) => (x - y) * (x - y)), lit(0.0), (s, x) => s + x))
-  def l2DistanceSql(a: String, b: String): String =
-    s"sqrt(list_sum(list_transform(generate_series(1, len($a)), i -> ($a[i]-$b[i])*($a[i]-$b[i]))))"
+  def l2DistanceSql(a: String, b: String): String = s"sqrt(${sqDistanceSql(a, b)})"
+  /** Σ (aᵢ−bᵢ)², the IVF list-assignment order (no sqrt). */
+  def sqDistanceSql(a: String, b: String): String =
+    s"list_sum(list_transform(generate_series(1, len($a)), i -> ($a[i]-$b[i])*($a[i]-$b[i])))"
 
   /** Cosine similarity, the pgvector `vector_cosine_ops` semantics. */
   def cosineSimilarity(a: Column, b: Column): Column =
     dot(a, b) / (norm2(a) * norm2(b))
   def cosineSimilaritySql(a: String, b: String): String =
     s"${dotSql(a, b)} / (${norm2Sql(a)} * ${norm2Sql(b)})"
+  /** The graph-ANN walk's cosine (`AnnGraph.cosine`): dot / sqrt(na·nb),
+    * 0 when either norm is 0. One sqrt of the product differs from the
+    * form above in the last ulp, so each twin mirrors its engine's form.
+    */
+  def cosineGuardedSql(a: String, b: String): String =
+    s"(CASE WHEN ${dotSql(a, a)} = 0 OR ${dotSql(b, b)} = 0 THEN 0.0 " +
+      s"ELSE ${dotSql(a, b)} / sqrt(${dotSql(a, a)} * ${dotSql(b, b)}) END)"
 
   // Native codegen'd variants (graft.functions.expressions, registered by
   // [[graft.GraftExtensions]]): one tight loop, no intermediate array.

@@ -131,7 +131,7 @@ object AnnIvf {
     index.copy(assigned = withGen(index.assigned).unionByName(assignedNew))
   }
 
-  // public for the same Catalyst-serializer reason as AnnNsw.GraphRow
+  // public for the same Catalyst-serializer reason as AnnGraph.GraphRow
   final case class AssignedRow(id: Long, e: Seq[Double], cluster: Int)
 
   /** Nearest-centroid assignment as ONE narrow pass: the centroid table

@@ -1,6 +1,8 @@
 package graft.operators
 
+import org.apache.spark.graphx.{Edge, Graph}
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions.col
 
 /** Data-sized RDD partitioning for the GraphX paths.
   *
@@ -38,5 +40,28 @@ object SizedRdd {
     val cur = df.sparkSession.sparkContext.defaultParallelism
     val t = bytes / bytesPerPart + 1
     math.max(2, math.min(cur, if (t > Int.MaxValue) Int.MaxValue else t.toInt))
+  }
+
+  /** GraphX connected components of the undirected graph over
+    * `vertices` (one id column) and `edges` (two id columns), as
+    * (doc_id, keeper) with keeper = the smallest id in the vertex's
+    * component — GraphX CC labels every vertex with the smallest vertex
+    * id reachable, exactly the deterministic keep-one-per-group rule.
+    * Both RDDs are coalesced to the width [[parts]] gives the VERTEX
+    * scan (the anchor rule above). `shuffleEdges` keeps an expensive
+    * edge generator at its own width: a narrow coalesce would pull the
+    * generator itself down to that width, so only its small output rows
+    * should move.
+    */
+  def connectedComponents(vertices: DataFrame, edges: DataFrame,
+      shuffleEdges: Boolean): DataFrame = {
+    val spark = vertices.sparkSession
+    import spark.implicits._
+    val p = parts(vertices)
+    val vRDD = vertices.as[Long].rdd.coalesce(p).map(id => (id, ()))
+    val eRDD = edges.as[(Long, Long)].rdd.coalesce(p, shuffle = shuffleEdges)
+      .map { case (a, b) => Edge(a, b, ()) }
+    Graph(vRDD, eRDD, ()).connectedComponents().vertices.toDF("doc_id", "keeper")
+      .select(col("doc_id"), col("keeper").cast("long").as("keeper"))
   }
 }

@@ -211,10 +211,16 @@ object GraphBuild {
   def childrenOf(graph: DataFrame, nodeId: Long): DataFrame = {
     val out = Seq("id", "path", "name", "type", "children_count", "count").map(col)
     graph.filter(col("id") === nodeId).select("path", "depth").collect()
-      .map(p => graph.filter(col("depth") === lit(p.get(1)) + 1 &&
-          col("path").startsWith(concat(lit(p.get(0)), lit("."))))
-        .select(out: _*))
+      .map(p => graph.filter(isChildOf(p.get(0), p.get(1))).select(out: _*))
       .reduceOption(_ union _)
       .getOrElse(graph.filter(lit(false)).select(out: _*))
   }
+
+  /** The ltree `path ~ 'parent.*{1}'` rule as literals: a row is an
+    * immediate child when its `depth` is the parent's plus one and its
+    * `path` extends the parent's by one `.`-separated label.
+    */
+  def isChildOf(parentPath: Any, parentDepth: Any): Column =
+    col("depth") === lit(parentDepth) + 1 &&
+      col("path").startsWith(concat(lit(parentPath), lit(".")))
 }

@@ -40,10 +40,6 @@ object BpeQueries {
     */
   private[graft] val MaxTrainWords = 32768
 
-  // same budget as q_pack_sequences (TextAnalyticsQueries) — the BPE
-  // variant packs the SAME stream under the tokenizer a trainer bills
-  private val PackBudget = 512L
-
   /** ranks = the trained merge table; wordToks = (w, toks, wc, n_tok)
     * for every distinct corpus word, persisted (every query in the pack
     * joins it); termsPath = the per-dir merges export the engine reads.
@@ -166,31 +162,14 @@ object BpeQueries {
     * by. Same adaptive prefix sum; docs tokenizing to 0 BPE tokens are
     * excluded in both engines (keeps every DIV operand positive).
     */
-  private val packSeqBpe: Q = (s, d) => {
-    val base = Tables.documents(s, d).select(col("doc_id"), col("source"))
+  private val packSeqBpe: Q = (s, d) =>
+    TextAnalyticsQueries.packBySource(s, d, Tables.documents(s, d)
+      .select(col("doc_id"), col("source"))
       .join(perDocCounts(s, d).select(col("doc_id"), col("n_tokens_bpe")),
         Seq("doc_id"), "left")
       .select(col("doc_id"), col("source"),
         coalesce(col("n_tokens_bpe"), lit(0L)).as("n_tok"))
-      .filter(col("n_tok") > 0)
-    // the catalog stat is over UNFILTERED documents — an upper bound on
-    // this filtered frame's max group, which is gate-safe (both branches
-    // are bit-identical; a bound can only pick the bucketed shape early)
-    val maxG = graft.Stats.scalar(s, d, "documents.source:maxGroup")(
-      Tables.documents(s, d).select(col("source")).groupBy("source").count()
-        .agg(coalesce(max(col("count")), lit(0L))).head().getLong(0))
-    graft.operators.Ordinals
-      .prefixSum(base, "source", "doc_id", "n_tok", "cum_end",
-        knownMaxGroup = Some(maxG))
-      .withColumn("cum_start", col("cum_end") - col("n_tok"))
-      .withColumn("seq_id", explode(expr(
-        s"sequence(cum_start DIV $PackBudget, (cum_end - 1) DIV $PackBudget)")))
-      .withColumn("tok_start", greatest(lit(0L), col("seq_id") * PackBudget - col("cum_start")))
-      .withColumn("tok_len",
-        least(col("n_tok"), (col("seq_id") + 1L) * PackBudget - col("cum_start"))
-          - col("tok_start"))
-      .select("source", "seq_id", "doc_id", "n_tok", "tok_start", "tok_len")
-  }
+      .filter(col("n_tok") > 0))
 
   // O-32's window geometry (TextAnalyticsQueries WinSize/WinStride) —
   // the BPE variant slides the same windows over the SUBWORD stream
@@ -357,15 +336,5 @@ object BpeQueries {
          |         CAST(sum(n_tok) OVER (PARTITION BY source ORDER BY doc_id
          |           ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS cum_end
          |  FROM f),
-         |b AS (SELECT doc_id, source, n_tok, cum_end,
-         |             CAST(cum_end - n_tok AS BIGINT) AS cum_start FROM w),
-         |e AS (SELECT *, unnest(generate_series(
-         |        CAST(cum_start // $PackBudget AS BIGINT),
-         |        CAST((cum_end - 1) // $PackBudget AS BIGINT))) AS seq_id
-         |      FROM b)
-         |SELECT source, seq_id, doc_id, n_tok,
-         |       CAST(greatest(0, seq_id * $PackBudget - cum_start) AS BIGINT) AS tok_start,
-         |       CAST(least(n_tok, (seq_id + 1) * $PackBudget - cum_start)
-         |         - greatest(0, seq_id * $PackBudget - cum_start) AS BIGINT) AS tok_len
-         |FROM e""".stripMargin)
+         |${TextAnalyticsQueries.packTailSql("w")}""".stripMargin)
 }

@@ -968,8 +968,6 @@ object CorpusQueries {
     */
   private def hybridIvfSql: String = {
     import graft.functions.VectorOps.{cosineSimilaritySql, l2DistanceSql}
-    val sqDist = (a: String, b: String) =>
-      s"list_sum(list_transform(generate_series(1, len($a)), i -> ($a[i]-$b[i])*($a[i]-$b[i])))"
     val ivfPath = graft.queries.VectorQueries.ivfExportPath
     s"""WITH $bm25ScoredCtes,
        |lex AS (
@@ -983,13 +981,7 @@ object CorpusQueries {
        |embv AS (
        |  SELECT vec_id, list_transform(embedding, x -> CAST(x AS DOUBLE)) AS e
        |  FROM embeddings),
-       |assigned AS (
-       |  SELECT vec_id, e, cluster FROM (
-       |    SELECT a.vec_id, a.e, c.cluster,
-       |           row_number() OVER (PARTITION BY a.vec_id
-       |             ORDER BY ${sqDist("a.e", "c.centroid")}, c.cluster) AS ark
-       |    FROM embv a CROSS JOIN cents c)
-       |  WHERE ark = 1),
+       |${graft.queries.VectorQueries.assignCteOver("embv", "assigned")},
        |vprobes AS (SELECT vec_id AS probe_id, e AS pv FROM embv WHERE vec_id < $Bm25Probes),
        |plists AS (
        |  SELECT probe_id, pv, cluster FROM (

@@ -638,24 +638,15 @@ object DedupQueries {
       .select(col("src"), col("dst"))
   }
 
-  private val ccGroups: Q = (s, d) => {
-    import s.implicits._
-    val docs = Tables.documents(s, d).select(col("doc_id"))
-    val edges = ccChainEdges(s, d)
-    // data-sized Pregel width: the edge RDD otherwise inherits the
-    // 32-way join shuffle layout and every superstep pays empty tasks.
-    // Anchored on the SCAN (r19 — SizedRdd doc): the semi-join's own
-    // size estimate is inflated and pinned the width at the 32 cap.
-    val p = graft.operators.SizedRdd.parts(docs)
-    val vRDD = docs.as[Long].rdd.coalesce(p).map(id => (id, ()))
-    val eRDD = edges.as[(Long, Long)].rdd.coalesce(p)
-      .map { case (a, b) => org.apache.spark.graphx.Edge(a, b, ()) }
-    val g = org.apache.spark.graphx.Graph(vRDD, eRDD, ())
-    // GraphX CC labels every vertex with the smallest vertex id reachable
-    // — exactly the deterministic "keeper = min doc_id in group" rule
-    g.connectedComponents().vertices.toDF("doc_id", "keeper")
-      .select(col("doc_id"), col("keeper").cast("long").as("keeper"))
-  }
+  // data-sized Pregel width: the edge RDD otherwise inherits the 32-way
+  // join shuffle layout and every superstep pays empty tasks. Anchored
+  // on the SCAN (r19 — SizedRdd doc): the semi-join's own size estimate
+  // is inflated and pinned the width at the 32 cap. The chain edges are
+  // a cheap projection, so their coalesce stays narrow.
+  private val ccGroups: Q = (s, d) =>
+    graft.operators.SizedRdd.connectedComponents(
+      Tables.documents(s, d).select(col("doc_id")), ccChainEdges(s, d),
+      shuffleEdges = false)
 
   // ---- the dedup ENDGAME on the real pair generator ----
   // q_dedup_cc proves the closure machinery on deterministic chain
@@ -666,26 +657,18 @@ object DedupQueries {
   // output (iterative label propagation, nothing driver-side); the
   // oracle replays the SAME pair SQL through a recursive CTE, so the
   // whole pipeline pairs-included is hash-checked.
+  // Sized from Catalyst's estimate of the CORPUS scan — NOT a count
+  // (which would re-run the whole band-join pair generation), and NOT
+  // the pair join itself (whose join-cardinality estimate is garbage and
+  // pinned the width at the 32 cap — r19, SizedRdd doc). The edge
+  // coalesce must SHUFFLE: a narrow coalesce would pull the expensive
+  // band-join pair generation itself down to p tasks (floor 2) whenever
+  // Catalyst's size estimate undershoots — the join stays at full
+  // shuffle width and only the small pair rows move.
   private val minhashGroups: Q = (s, d) => {
-    import s.implicits._
     val pairs = minhash(s, d)
-    val docs = corpus(s, d).select(col("doc_id"))
-    // sized from Catalyst's estimate of the CORPUS scan — NOT a count
-    // (which would re-run the whole band-join pair generation), and NOT
-    // the pair join itself (whose join-cardinality estimate is garbage
-    // and pinned the width at the 32 cap — r19, SizedRdd doc)
-    val p = graft.operators.SizedRdd.parts(docs)
-    val vRDD = docs.as[Long].rdd.coalesce(p).map(id => (id, ()))
-    // edge coalesce must SHUFFLE: a narrow coalesce would pull the
-    // expensive band-join pair generation itself down to p tasks
-    // (floor 2) whenever Catalyst's size estimate undershoots — the
-    // join stays at full shuffle width and only the small pair rows
-    // move. The vertex RDD is a cheap projection, narrow is fine.
-    val eRDD = pairs.as[(Long, Long)].rdd.coalesce(p, shuffle = true)
-      .map { case (a, b) => org.apache.spark.graphx.Edge(a, b, ()) }
-    val g = org.apache.spark.graphx.Graph(vRDD, eRDD, ())
-    g.connectedComponents().vertices.toDF("doc_id", "keeper")
-      .select(col("doc_id"), col("keeper").cast("long").as("keeper"))
+    graft.operators.SizedRdd.connectedComponents(
+      corpus(s, d).select(col("doc_id")), pairs, shuffleEdges = true)
   }
 
   // ---- winnowing fingerprints (Schleimer et al. 2003, SIGMOD) ----
@@ -1042,8 +1025,6 @@ object DedupQueries {
     },
     "q_dedup_semantic" -> {
       val e = s"(SELECT vec_id, ${toDoubleArrSql("embedding")} AS e FROM embeddings)"
-      val sqDist = (a: String, b: String) =>
-        s"list_sum(list_transform(generate_series(1, len($a)), i -> ($a[i]-$b[i])*($a[i]-$b[i])))"
       s"""WITH cents AS (SELECT cluster, centroid FROM '${VectorQueries.ivfExportPath}/*.parquet'),
          |corpus AS (
          |  SELECT vec_id, e FROM $e
@@ -1053,7 +1034,7 @@ object DedupQueries {
          |  SELECT vec_id, e, cluster, ${norm2Sql("e")} AS nrm FROM (
          |    SELECT a.vec_id, a.e, c.cluster,
          |           row_number() OVER (PARTITION BY a.vec_id
-         |             ORDER BY ${sqDist("a.e", "c.centroid")}, c.cluster) AS ark
+         |             ORDER BY ${sqDistanceSql("a.e", "c.centroid")}, c.cluster) AS ark
          |    FROM corpus a CROSS JOIN cents c)
          |  WHERE ark = 1),
          |pairs AS (

@@ -434,9 +434,7 @@ object ExtendedQueries {
     // shape as medianPick; below 64k rows/group the two windows share
     // one exchange, past it each rank is a distributed range sort. The
     // shared gate statistic is memoized catalog state (Stats doc).
-    val maxG = graft.Stats.scalar(s, d, "documents.source:maxGroup")(
-      Tables.documents(s, d).select(col("source")).groupBy("source").count()
-        .agg(coalesce(max(col("count")), lit(0L))).head().getLong(0))
+    val maxG = graft.Stats.sourceMaxGroup(s, d)
     val ranked = Ordinals.rankAndCount(
       Ordinals.rankAndCount(base, "source",
         Seq(col("n_chars"), col("doc_id")), "r1", None,

@@ -232,10 +232,8 @@ object GraphAnalyticsQueries {
   // upper end of comfortable (guide §3.1). The stat is catalog state
   // (the Stats precedent), one count per (session, dir).
   private[graft] val LpaBroadcastMaxNodes = 10000000L
-  private def lpaNodesUpperBound(s: SparkSession, d: String): Long =
-    2L * graft.Stats.scalar(s, d, "documents.count") {
-      Tables.documents(s, d).count()
-    }
+  private[graft] def lpaNodesUpperBound(s: SparkSession, d: String): Long =
+    2L * graft.Stats.documentCount(s, d)
 
   private val communities: Q = (s, d) => lpaCommunities(s, d)
 

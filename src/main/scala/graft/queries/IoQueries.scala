@@ -430,7 +430,7 @@ object IoQueries {
     * of semantically-coherent windows. Rides the build_e1_model memo:
     * vectors are the exported ×1e4 BIGINT emotion scores, so dot and
     * norms are exact integers (≤ 6·10⁸, far inside BIGINT) and the ONE
-    * IEEE expression is the AnnNsw cosine shape (dot / sqrt(na·nb),
+    * IEEE expression is the AnnGraph cosine shape (dot / sqrt(na·nb),
     * round 6, +0.0); the boundary compare runs on the rounded value.
     * Norms are never zero (the scores are a probability row summing to
     * ~1e4). Per-doc result: window/chunk counts + the boundary-id
@@ -599,7 +599,6 @@ object IoQueries {
     * singleton images appear as their own keeper.
     */
   private val phashGroups: Q = (s, d) => {
-    import s.implicits._
     val pairs = phashPairs(s, d).select(col("doc_a"), col("doc_b"))
     val ids = Tables.documents(s, d).select(col("doc_id"))
       .unionAll(Tables.documents(s, d)
@@ -610,13 +609,7 @@ object IoQueries {
     // and NOT the pair join (its inflated estimate pinned the width at
     // the 32 cap — r19, SizedRdd doc); edge coalesce must SHUFFLE so
     // the band join stays at full width
-    val p = graft.operators.SizedRdd.parts(ids)
-    val vRDD = ids.as[Long].rdd.coalesce(p).map(id => (id, ()))
-    val eRDD = pairs.as[(Long, Long)].rdd.coalesce(p, shuffle = true)
-      .map { case (a, b) => Edge(a, b, ()) }
-    XGraph(vRDD, eRDD, ()).connectedComponents().vertices
-      .toDF("doc_id", "keeper")
-      .select(col("doc_id"), col("keeper").cast("long").as("keeper"))
+    graft.operators.SizedRdd.connectedComponents(ids, pairs, shuffleEdges = true)
   }
 
   /** Parquet sink + small-file compaction round trip: the engine's own

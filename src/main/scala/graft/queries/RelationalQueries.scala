@@ -271,9 +271,10 @@ object RelationalQueries {
 
   /** O-28 ltree immediate-children match (graph_repo.py:114-123): the
     * materialized-path table is built from region→nation, then the
-    * `path ~ 'root.1.*{1}'` predicate becomes prefix + depth. Both are
-    * string predicates pushed into the scan; at scale the graph table is
-    * additionally partitioned by depth for pruning.
+    * `path ~ 'root.1.*{1}'` predicate becomes prefix + depth — the one
+    * rule `GraphBuild.childrenOf` serves with. Both are predicates
+    * pushed into the scan; at scale the graph table is additionally
+    * partitioned by depth for pruning.
     */
   private val o28: Q = (s, d) => {
     val g = Tables.nation(s, d)
@@ -283,7 +284,7 @@ object RelationalQueries {
           lit("."), col("n_nationkey").cast("string")).as("path"),
         col("n_name").as("name"))
       .withColumn("depth", size(split(col("path"), "\\.")).cast("long"))
-    g.filter(col("path").startsWith("root.1.") && col("depth") === 3)
+    g.filter(graft.operators.clustering.GraphBuild.isChildOf("root.1", 2L))
   }
 
   /** Sessionization over events: 30-min-gap sessions via lag + running

@@ -143,8 +143,7 @@ object SelectionQueries {
       .withColumn("_ord", struct((-col("quality_bp")).as("nq"), col("doc_id").as("d")))
     // gate stat (one constant group ⇒ max group = row count) from the
     // Stats catalog — skips the per-execution count job
-    val nDocs = graft.Stats.scalar(s, d, "documents:count")(
-      Tables.documents(s, d).count())
+    val nDocs = graft.Stats.documentCount(s, d)
     val cum = graft.operators.Ordinals.prefixSum(
       ordered, "_g", "_ord", "n_tokens", "cum_toks",
       knownMaxGroup = Some(nDocs))
@@ -194,8 +193,7 @@ object SelectionQueries {
       .withColumn("h",
         expr("CAST((CAST(doc_id AS DECIMAL(38,0)) * 2654435761) % 4294967296 AS BIGINT)"))
       .withColumn("_g", pmod(col("doc_id"), lit(1L)))
-    val nDocs = graft.Stats.scalar(s, d, "documents:count")(
-      Tables.documents(s, d).count())
+    val nDocs = graft.Stats.documentCount(s, d)
     val ranked = graft.operators.Ordinals.rankAndCount(
       keyed, "_g", Seq(col("h"), col("doc_id")), "pos", Some("n"),
       knownMaxGroup = Some(nDocs))

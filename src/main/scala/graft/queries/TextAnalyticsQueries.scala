@@ -379,19 +379,25 @@ object TextAnalyticsQueries {
   // twin's SQL.
   private val PackBudget = 512L
 
-  private val packSeq: Q = (s, d) => {
-    // no persist here: the gate stat comes from the catalog (same key
-    // the Spearman rank gate uses), the window branch reads base once,
-    // and the bucketed branch persists internally for its two consumers
-    val base = Tables.documents(s, d)
+  private val packSeq: Q = (s, d) =>
+    packBySource(s, d, Tables.documents(s, d)
       .select(col("doc_id"), col("source"),
-        size(split(col("text"), " ")).cast("long").as("n_tok"))
-    val maxG = graft.Stats.scalar(s, d, "documents.source:maxGroup")(
-      Tables.documents(s, d).select(col("source")).groupBy("source").count()
-        .agg(coalesce(max(col("count")), lit(0L))).head().getLong(0))
+        size(split(col("text"), " ")).cast("long").as("n_tok")))
+
+  /** The packing of q_pack_sequences and q_pack_sequences_bpe: `base`
+    * (doc_id, source, n_tok) laid end to end per source in doc_id order
+    * and cut into PackBudget-token sequences, one row per (sequence,
+    * doc) overlap. No persist here: the gate stat comes from the catalog
+    * (the Spearman rank gate's), the window branch reads base once, and
+    * the bucketed branch persists internally for its two consumers. The
+    * stat is over UNFILTERED documents — an upper bound on a filtered
+    * base's max group, which is gate-safe (both branches are
+    * bit-identical; a bound can only pick the bucketed shape early).
+    */
+  private[graft] def packBySource(s: SparkSession, d: String, base: DataFrame): DataFrame =
     graft.operators.Ordinals
       .prefixSum(base, "source", "doc_id", "n_tok", "cum_end",
-        knownMaxGroup = Some(maxG))
+        knownMaxGroup = Some(graft.Stats.sourceMaxGroup(s, d)))
       .withColumn("cum_start", col("cum_end") - col("n_tok"))
       .withColumn("seq_id", explode(expr(
         s"sequence(cum_start DIV $PackBudget, (cum_end - 1) DIV $PackBudget)")))
@@ -400,7 +406,6 @@ object TextAnalyticsQueries {
         least(col("n_tok"), (col("seq_id") + 1L) * PackBudget - col("cum_start"))
           - col("tok_start"))
       .select("source", "seq_id", "doc_id", "n_tok", "tok_start", "tok_len")
-  }
 
   // Every windowed sum and derived column is explicitly CAST to BIGINT:
   // DuckDB's sum(BIGINT) yields a HUGEINT/DECIMAL intermediate whose
@@ -416,8 +421,14 @@ object TextAnalyticsQueries {
        |           OVER (PARTITION BY source ORDER BY doc_id
        |                 ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS BIGINT) AS cum_end
        |  FROM documents),
-       |b AS (SELECT doc_id, source, n_tok, cum_end,
-       |             CAST(cum_end - n_tok AS BIGINT) AS cum_start FROM c),
+       |${packTailSql("c")}""".stripMargin
+
+  /** [[packBySource]]'s twin from the relation `cum` (doc_id, source,
+    * n_tok, cum_end) on.
+    */
+  private[graft] def packTailSql(cum: String): String =
+    s"""b AS (SELECT doc_id, source, n_tok, cum_end,
+       |             CAST(cum_end - n_tok AS BIGINT) AS cum_start FROM $cum),
        |e AS (SELECT *, unnest(generate_series(
        |        CAST(cum_start // $PackBudget AS BIGINT),
        |        CAST((cum_end - 1) // $PackBudget AS BIGINT))) AS seq_id

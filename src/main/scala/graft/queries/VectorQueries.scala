@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 
 import graft.Tables
 import graft.functions.VectorOps._
-import graft.operators.AnnIvf
+import graft.operators.{AnnGraph, AnnIvf}
 
 /** Vector / similarity-search / eval pack (O-54, O-56, O-37, O-12, O-41)
   * over `embeddings` (ARRAY<FLOAT> ×64) and `documents`.
@@ -106,7 +106,7 @@ object VectorQueries {
   private val ivfCache = graft.SessionCache
     .artifact[AnnIvf.IvfIndex]("ivf_index")(_.assigned.unpersist())
   private val nswCache = graft.SessionCache
-    .artifact[graft.operators.AnnNsw.NswIndex]("nsw_graph")(_.graph.unpersist())
+    .artifact[AnnGraph.GraphIndex]("nsw_graph")(_.graph.unpersist())
 
   /** Where the trained coarse-quantizer centroids are exported for the
     * q_ann_ivf oracle (r12, VERDICT r11 #6 — the q_graph_children /
@@ -162,12 +162,12 @@ object VectorQueries {
   private[graft] def nswExportPath: String = java.nio.file.Paths
     .get(sys.props("java.io.tmpdir"), "graft_nsw_graph").toString
 
-  /** The memoized NSW index; building it (re)writes the adjacency
-    * export the walk oracle replays.
+  /** The memoized NSW index (layer 0 only); building it (re)writes the
+    * adjacency export the walk oracle replays.
     */
-  private[graft] def nswIndex(s: SparkSession, d: String): graft.operators.AnnNsw.NswIndex =
+  private[graft] def nswIndex(s: SparkSession, d: String): AnnGraph.GraphIndex =
     nswCache.getOrElseUpdate(s, d) {
-      val ix = graft.operators.AnnNsw.buildGraph(ivfIndex(s, d))
+      val ix = AnnGraph.buildGraph(ivfIndex(s, d))
       ix.graph.write.mode("overwrite").parquet(nswExportPath)
       ix
     }
@@ -183,11 +183,12 @@ object VectorQueries {
     .get(sys.props("java.io.tmpdir"), "graft_hnsw_layers").toString
 
   private val hnswCache = graft.SessionCache
-    .artifact[graft.operators.AnnHnsw.HnswIndex]("hnsw_layers")(_.layers.unpersist())
+    .artifact[AnnGraph.GraphIndex]("hnsw_layers")(_.layers.unpersist())
 
-  private[graft] def hnswIndex(s: SparkSession, d: String): graft.operators.AnnHnsw.HnswIndex =
+  /** The memoized HNSW index: the NSW index plus its upper layers. */
+  private[graft] def hnswIndex(s: SparkSession, d: String): AnnGraph.GraphIndex =
     hnswCache.getOrElseUpdate(s, d) {
-      val ix = graft.operators.AnnHnsw.buildLayers(nswIndex(s, d))
+      val ix = AnnGraph.buildLayers(nswIndex(s, d))
       ix.layers.write.mode("overwrite").parquet(hnswExportPath)
       ix
     }
@@ -513,6 +514,26 @@ object VectorQueries {
       .withColumn("recall_bp", expr(s"(n_hits * 10000) DIV $RecallK"))
   }
 
+  /** The scaffold of the IVF / NSW / HNSW recall metrics: the first `n`
+    * vectors as (pid, embedding) probes, and their exact cosine top-k
+    * over the whole corpus.
+    */
+  private def recallProbes(s: SparkSession, d: String, n: Int): (DataFrame, DataFrame) = {
+    val probes = Tables.embeddings(s, d).filter(col("vec_id") < n)
+      .select(col("vec_id").as("pid"), col("embedding"))
+    val exact = exactTopK(emb(s, d).select(col("vec_id"), col("e")),
+      emb(s, d).filter(col("vec_id") < n)
+        .select(col("vec_id").as("probe_id"), col("e").as("pv")))
+    (probes, exact)
+  }
+
+  /** Per probe, how many (probe_id, vec_id) rows of `found` are in
+    * `truth`, as column `as`; probes with no hit are absent.
+    */
+  private def hitCount(found: DataFrame, truth: DataFrame, as: String): DataFrame =
+    found.join(truth, Seq("probe_id", "vec_id"))
+      .groupBy("probe_id").agg(count(lit(1)).as(as))
+
   /** IVF recall@10 vs exact, nProbe ∈ {4, 16} over the auto-sized index
     * (oracle-checked since r12 via the same centroid-export replay as
     * q_ann_ivf — the recall numbers themselves are hash-compared;
@@ -520,13 +541,8 @@ object VectorQueries {
     * ScalaTest, plus a floor on the nProbe=4 mean).
     */
   private val ivfRecall: Q = (s, d) => {
-    val embT = Tables.embeddings(s, d)
     val index = ivfIndex(s, d)
-    val probes = embT.filter(col("vec_id") < RecallProbes)
-      .select(col("vec_id").as("pid"), col("embedding"))
-    val exact = exactTopK(emb(s, d).select(col("vec_id"), col("e")),
-      emb(s, d).filter(col("vec_id") < RecallProbes)
-        .select(col("vec_id").as("probe_id"), col("e").as("pv")))
+    val (probes, exact) = recallProbes(s, d, RecallProbes)
     def rec(nProbe: Int): DataFrame =
       AnnIvf.topK(index, probes, "pid", "embedding", RecallK, nProbe)
         .select(lit(nProbe).cast("long").as("n_probe"),
@@ -548,38 +564,29 @@ object VectorQueries {
   /** NSW recall@10 (oracle-checked since r13 via the adjacency-export
     * walk replay — see [[nswRecallSql]]; the §5.4 fence covers only the
     * graph BUILD, whose output is exported as data):
-    * greedy bounded walk over the per-list navigable-small-world graphs
-    * vs (a) the global exact top-10 (`recall_bp` — end-to-end quality,
-    * routing loss included, mirroring `q_ann_recall_ivf`) and (b) the
-    * linear scan of the SAME probed lists (`walk_bp` — isolates what the
-    * bounded walk loses vs an exhaustive in-list scan: the 100 TB
-    * trade, where the walk replaces the scan per shard). Invariants
-    * (exhaustive-walk == scan, degree bound, determinism) in AnnNswSpec.
+    * [[AnnGraph.topK]] over the layer-0-only index (entry = each list's
+    * min id, then the bounded walk) vs (a) the global exact top-10
+    * (`recall_bp` — end-to-end quality, routing loss included,
+    * mirroring `q_ann_recall_ivf`) and (b) the linear scan of the SAME
+    * probed lists (`walk_bp` — isolates what the bounded walk loses vs
+    * an exhaustive in-list scan: the 100 TB trade, where the walk
+    * replaces the scan per shard). Invariants (exhaustive-walk == scan,
+    * degree bound, determinism) in AnnNswSpec.
     */
   private val nswRecall: Q = (s, d) => {
-    val embT = Tables.embeddings(s, d)
     val index = ivfIndex(s, d)
     val nsw = nswIndex(s, d)
-    val probes = embT.filter(col("vec_id") < RecallProbes)
-      .select(col("vec_id").as("pid"), col("embedding"))
-    val exact = exactTopK(emb(s, d).select(col("vec_id"), col("e")),
-      emb(s, d).filter(col("vec_id") < RecallProbes)
-        .select(col("vec_id").as("probe_id"), col("e").as("pv")))
+    val (probes, exact) = recallProbes(s, d, RecallProbes)
     def rec(nProbe: Int): DataFrame = {
-      val walked = graft.operators.AnnNsw
-        .topK(nsw, probes, "pid", "embedding", RecallK, nProbe)
+      val walked = AnnGraph.topK(nsw, probes, "pid", "embedding", RecallK, nProbe)
         .select(col("probe_id"), col("vec_id"))
       val scanned = AnnIvf.topK(index, probes, "pid", "embedding", RecallK, nProbe)
         .select(col("probe_id"), col("vec_id"))
       // left joins from the probe list: a probe whose walk found no
       // exact/scan hits must still appear, at recall 0
       probes.select(col("pid").cast("long").as("probe_id"))
-        .join(walked.join(exact, Seq("probe_id", "vec_id"))
-          .groupBy("probe_id").agg(count(lit(1)).as("h_exact")),
-          Seq("probe_id"), "left")
-        .join(walked.join(scanned, Seq("probe_id", "vec_id"))
-          .groupBy("probe_id").agg(count(lit(1)).as("h_scan")),
-          Seq("probe_id"), "left")
+        .join(hitCount(walked, exact, "h_exact"), Seq("probe_id"), "left")
+        .join(hitCount(walked, scanned, "h_scan"), Seq("probe_id"), "left")
         .select(lit(nProbe).cast("long").as("n_probe"), col("probe_id"),
           coalesce(col("h_exact"), lit(0L)).as("n_hits"),
           expr(s"(coalesce(h_exact, 0) * 10000) DIV $RecallK").as("recall_bp"),
@@ -594,33 +601,25 @@ object VectorQueries {
 
   /** HNSW recall@10 (r15 — closes VERDICT r14 "What's missing" #3, the
     * multi-layer entry hierarchy of the reference's pgvector `hnsw`
-    * index): greedy descent down the per-list layer hierarchy picks the
-    * base-walk entry, then the UNCHANGED efSearch-bounded NSW walk —
-    * recall vs the global exact top-10. Oracle-checked end to end: the
-    * twin replays the descent (a second recursive CTE over the layers
-    * export) in front of the proven walk replay. Fewer probes than the
-    * NSW metric (20 vs 50) and one nProbe variant keep the twin's
-    * walk-replay cost bounded. Build invariants (nested membership,
-    * degree bound, descent entry validity, exhaustive-walk parity) in
-    * AnnNswSpec.
+    * index): [[AnnGraph.topK]] over the layered index — greedy descent
+    * down the per-list layer hierarchy picks the entry of the same
+    * efSearch-bounded walk — recall vs the global exact top-10.
+    * Oracle-checked end to end: the twin replays the descent (a second
+    * recursive CTE over the layers export) in front of the walk replay.
+    * Fewer probes than the NSW metric (20 vs 50) and one nProbe variant
+    * keep the twin's walk-replay cost bounded. Build invariants (nested
+    * membership, degree bound, descent entry validity, exhaustive-walk
+    * parity) in AnnNswSpec.
     */
   private val hnswRecall: Q = (s, d) => {
-    val embT = Tables.embeddings(s, d)
     val index = ivfIndex(s, d)
     val hnsw = hnswIndex(s, d)
-    val probes = embT.filter(col("vec_id") < HnswProbes)
-      .select(col("vec_id").as("pid"), col("embedding"))
-    val exact = exactTopK(emb(s, d).select(col("vec_id"), col("e")),
-      emb(s, d).filter(col("vec_id") < HnswProbes)
-        .select(col("vec_id").as("probe_id"), col("e").as("pv")))
+    val (probes, exact) = recallProbes(s, d, HnswProbes)
     val nL = index.centroids.count().toInt
-    val walked = graft.operators.AnnHnsw
-      .topK(hnsw, probes, "pid", "embedding", RecallK, math.max(1, nL / 4))
+    val walked = AnnGraph.topK(hnsw, probes, "pid", "embedding", RecallK, math.max(1, nL / 4))
       .select(col("probe_id"), col("vec_id"))
     probes.select(col("pid").cast("long").as("probe_id"))
-      .join(walked.join(exact, Seq("probe_id", "vec_id"))
-        .groupBy("probe_id").agg(count(lit(1)).as("h")),
-        Seq("probe_id"), "left")
+      .join(hitCount(walked, exact, "h"), Seq("probe_id"), "left")
       .select(col("probe_id"),
         coalesce(col("h"), lit(0L)).as("n_hits"),
         expr(s"(coalesce(h, 0) * 10000) DIV $RecallK").as("recall_bp"))
@@ -937,17 +936,14 @@ object VectorQueries {
     * the r12/r13 history shows it changes, and a copy would not
     * follow).
     */
-  private[graft] def assignCteOver(src: String, name: String): String = {
-    val sqDist = (a: String, b: String) =>
-      s"list_sum(list_transform(generate_series(1, len($a)), i -> ($a[i]-$b[i])*($a[i]-$b[i])))"
+  private[graft] def assignCteOver(src: String, name: String): String =
     s"""$name AS (
        |  SELECT vec_id, e, cluster FROM (
        |    SELECT a.vec_id, a.e, c.cluster,
        |           row_number() OVER (PARTITION BY a.vec_id
-       |             ORDER BY ${sqDist("a.e", "c.centroid")}, c.cluster) AS ark
+       |             ORDER BY ${sqDistanceSql("a.e", "c.centroid")}, c.cluster) AS ark
        |    FROM $src a CROSS JOIN cents c)
        |  WHERE ark = 1)""".stripMargin
-  }
 
   private[graft] def ivfAssignCtes: String =
     s"""cents AS (SELECT cluster, centroid FROM '$ivfExportPath/*.parquet'),
@@ -1008,72 +1004,72 @@ object VectorQueries {
        |  FROM plists l JOIN $assignedRel a ON a.cluster = l.cluster)
        |WHERE rk <= 10""".stripMargin
 
-  /** q_ann_recall_nsw twin (r13, VERDICT r12 #4): replays the bounded
-    * best-first walk from the exported per-list adjacency
-    * ([[nswExportPath]]) with a RECURSIVE CTE carrying the walk state
-    * (visited / frontier / results lists) per (probe, list):
+  /** The graph-ANN recall twins' opening CTEs: the centroid export,
+    * the double-cast corpus, the first `nProbes` vectors as probes, and
+    * each probe's lists ranked by centroid L2 (`crk`, ties to the lowest
+    * cluster — the AnnIvf routing rule).
+    */
+  private def graphRecallPrelude(nProbes: Int): String =
+    s"""WITH RECURSIVE
+       |cents AS (SELECT cluster, centroid FROM '$ivfExportPath/*.parquet'),
+       |emb AS (SELECT vec_id, e FROM $embSql),
+       |probes AS (SELECT vec_id AS probe_id, e AS pv FROM emb WHERE vec_id < $nProbes),
+       |ranked AS (
+       |  SELECT p.probe_id, p.pv, c.cluster,
+       |         row_number() OVER (PARTITION BY p.probe_id
+       |           ORDER BY ${l2DistanceSql("p.pv", "c.centroid")}, c.cluster) AS crk
+       |  FROM probes p CROSS JOIN cents c),""".stripMargin
+
+  /** Layer 0 of the NSW export as one vec_id → (e, nbrs) map per list. */
+  private val gmapCte: String =
+    s"""gmap AS (
+       |  SELECT cluster, map(list(vec_id), list(struct_pack(e := e, nbrs := nbrs))) AS gm
+       |  FROM graph GROUP BY cluster)""".stripMargin
+
+  /** Every probe's exact cosine top-k over the corpus (the o56 cosine
+    * form, rounded to 6 dp, ties to the lower vec_id).
+    */
+  private val exactCte: String =
+    s"""exact AS (
+       |  SELECT probe_id, vec_id FROM (
+       |    SELECT p.probe_id, a.vec_id,
+       |           row_number() OVER (PARTITION BY p.probe_id
+       |             ORDER BY round(${cosineSimilaritySql("a.e", "p.pv")}, 6) + 0.0 DESC, a.vec_id) AS rk
+       |    FROM emb a CROSS JOIN probes p)
+       |  WHERE rk <= $RecallK)""".stripMargin
+
+  /** [[AnnGraph.walkList]] replayed over `gmap` as the recursive CTE
+    * `walk`, carrying the walk state (visited / frontier / results lists)
+    * per (probe, list), then its kept results unnested as `hits`:
     *  - one step = pop the frontier's max-(cos, −id) candidate
     *    (struct lists sort lexicographically, so `list_sort(…,'DESC')[1]`
     *    with nid = −id is exactly the Scala PriorityQueue ordering),
     *  - stop when the frontier is empty or the popped candidate cannot
-    *    improve the worst of efSearch kept results (AnnNsw.topK's
+    *    improve the worst of efSearch kept results (the walk's
     *    termination, double-compare on the raw cosines),
     *  - otherwise splice in the unvisited neighbours, re-trim results
     *    to the top efSearch by (cos desc, id asc) — set-equivalent to
     *    the sequential push/evict because top-k under a total order is
     *    batch-order independent.
-    * The walk cosine is AnnNsw.cosine — dot / sqrt(na·nb) with the
-    * zero guard, which differs in the last ulp from the o56 helper's
-    * dot / (sqrt(na)·sqrt(nb)) — while the scanned/exact legs use the
-    * o56 form; BOTH must be mirrored exactly or rank ties flip.
-    * Walks run once per DISTINCT (probe, list) and join back to the
-    * nProbe variants. Validated bit-exact against the engine at
-    * sf0.001 AND sf0.1 (where lists ≈ 125 > efSearch and the
-    * termination branch actually fires) before wiring.
+    * The walk cosine is [[cosineGuardedSql]], AnnGraph's form. The anchor
+    * rows are the parameter: `from` joins `gmap g` to rows aliased `a`
+    * that carry probe_id, cluster and pv, and `entry` is the walk's
+    * first vec_id. efSearch is AnnGraph.topK's default, 32.
     */
-  private def nswRecallSql: String = {
-    val EF = 32 // AnnNsw.topK efSearch default — the declared query uses it
-    val sqDist = (a: String, b: String) =>
-      s"list_sum(list_transform(generate_series(1, len($a)), i -> ($a[i]-$b[i])*($a[i]-$b[i])))"
-    val dotS = (a: String, b: String) =>
-      s"list_sum(list_transform(generate_series(1, len($a)), i -> $a[i]*$b[i]))"
-    val cosNsw = (a: String, b: String) =>
-      s"(CASE WHEN ${dotS(a, a)} = 0 OR ${dotS(b, b)} = 0 THEN 0.0 " +
-        s"ELSE ${dotS(a, b)} / sqrt(${dotS(a, a)} * ${dotS(b, b)}) END)"
-    s"""WITH RECURSIVE
-       |cents AS (SELECT cluster, centroid FROM '$ivfExportPath/*.parquet'),
-       |emb AS (SELECT vec_id, e FROM $embSql),
-       |probes AS (SELECT vec_id AS probe_id, e AS pv FROM emb WHERE vec_id < $RecallProbes),
-       |ranked AS (
-       |  SELECT p.probe_id, p.pv, c.cluster,
-       |         row_number() OVER (PARTITION BY p.probe_id
-       |           ORDER BY ${l2DistanceSql("p.pv", "c.centroid")}, c.cluster) AS crk
-       |  FROM probes p CROSS JOIN cents c),
-       |nl AS (SELECT CAST(count(*) AS BIGINT) AS n FROM cents),
-       |variants AS (
-       |  SELECT CAST(greatest(1, n // 4) AS BIGINT) AS n_probe FROM nl
-       |  UNION ALL SELECT n FROM nl),
-       |graph AS (SELECT cluster, vec_id, e, nbrs FROM '$nswExportPath/*.parquet'),
-       |gmap AS (
-       |  SELECT cluster, map(list(vec_id), list(struct_pack(e := e, nbrs := nbrs))) AS gm
-       |  FROM graph GROUP BY cluster),
-       |entries AS (SELECT cluster, min(vec_id) AS entry FROM graph GROUP BY cluster),
-       |maxnp AS (SELECT max(n_probe) AS m FROM variants),
-       |pairs AS (
-       |  SELECT DISTINCT r.probe_id, r.pv, r.cluster
-       |  FROM ranked r, maxnp WHERE r.crk <= maxnp.m),
-       |walk AS (
-       |  SELECT p.probe_id, p.cluster, p.pv,
-       |         [en.entry] AS visited,
-       |         [struct_pack(c := ${cosNsw("g.gm[en.entry][1].e", "p.pv")}, nid := -en.entry)] AS frontier,
-       |         [struct_pack(c := ${cosNsw("g.gm[en.entry][1].e", "p.pv")}, nid := -en.entry)] AS results,
+  private def walkCtes(a: String, entry: String, from: String): String = {
+    val ef = 32
+    s"""walk AS (
+       |  SELECT $a.probe_id, $a.cluster, $a.pv,
+       |         [$entry] AS visited,
+       |         [struct_pack(c := ${cosineGuardedSql(s"g.gm[$entry][1].e", s"$a.pv")}, nid := -$entry)] AS frontier,
+       |         [struct_pack(c := ${cosineGuardedSql(s"g.gm[$entry][1].e", s"$a.pv")}, nid := -$entry)] AS results,
        |         false AS done
-       |  FROM pairs p JOIN entries en USING (cluster) JOIN gmap g USING (cluster)
+       |  FROM $from
        |  UNION ALL
        |  SELECT probe_id, cluster, pv,
        |         CASE WHEN stop THEN visited ELSE visited || unvis END AS visited,
        |         CASE WHEN stop THEN frontier_rest ELSE frontier_rest || news END AS frontier,
-       |         CASE WHEN stop THEN results ELSE list_sort(results || news, 'DESC')[1:$EF] END AS results,
+       |         CASE WHEN stop THEN results ELSE list_sort(results || news, 'DESC')[1:$ef] END AS results,
        |         stop AS done
        |  FROM (
        |    SELECT probe_id, cluster, pv, visited, frontier_rest, results, stop,
@@ -1081,19 +1077,44 @@ object VectorQueries {
        |             x -> NOT list_contains(visited, x)) END AS unvis,
        |           CASE WHEN stop THEN [] ELSE list_transform(
        |             list_filter(gm[-best.nid][1].nbrs, x -> NOT list_contains(visited, x)),
-       |             x -> struct_pack(c := ${cosNsw("gm[x][1].e", "pv")}, nid := -x)) END AS news
+       |             x -> struct_pack(c := ${cosineGuardedSql("gm[x][1].e", "pv")}, nid := -x)) END AS news
        |    FROM (
        |      SELECT w.probe_id, w.cluster, w.pv, w.visited, w.results, g.gm,
        |             list_sort(w.frontier, 'DESC')[1] AS best,
        |             list_sort(w.frontier, 'DESC')[2:] AS frontier_rest,
-       |             len(w.frontier) = 0 OR (len(w.results) >= $EF AND
+       |             len(w.frontier) = 0 OR (len(w.results) >= $ef AND
        |               list_sort(w.frontier, 'DESC')[1].c <
        |                 list_min(list_transform(w.results, r -> r.c))) AS stop
        |      FROM walk w JOIN gmap g USING (cluster)
        |      WHERE NOT w.done))),
        |hits AS (
        |  SELECT probe_id, cluster, unnest(results, recursive := true)
-       |  FROM walk WHERE done),
+       |  FROM walk WHERE done)""".stripMargin
+  }
+
+  /** q_ann_recall_nsw twin (r13, VERDICT r12 #4): [[walkCtes]] from each
+    * list's min vec_id over the exported per-list adjacency
+    * ([[nswExportPath]]). The scanned/exact legs use the o56 cosine
+    * form, the walk [[cosineGuardedSql]] — they differ in the last ulp
+    * and BOTH must be mirrored exactly or rank ties flip. Walks run once
+    * per DISTINCT (probe, list) and join back to the nProbe variants.
+    * Validated bit-exact against the engine at sf0.001 AND sf0.1 (where
+    * lists ≈ 125 > efSearch and the termination branch actually fires).
+    */
+  private def nswRecallSql: String =
+    s"""${graphRecallPrelude(RecallProbes)}
+       |nl AS (SELECT CAST(count(*) AS BIGINT) AS n FROM cents),
+       |variants AS (
+       |  SELECT CAST(greatest(1, n // 4) AS BIGINT) AS n_probe FROM nl
+       |  UNION ALL SELECT n FROM nl),
+       |graph AS (SELECT cluster, vec_id, e, nbrs FROM '$nswExportPath/*.parquet'),
+       |$gmapCte,
+       |entries AS (SELECT cluster, min(vec_id) AS entry FROM graph GROUP BY cluster),
+       |maxnp AS (SELECT max(n_probe) AS m FROM variants),
+       |pairs AS (
+       |  SELECT DISTINCT r.probe_id, r.pv, r.cluster
+       |  FROM ranked r, maxnp WHERE r.crk <= maxnp.m),
+       |${walkCtes("p", "en.entry", "pairs p JOIN entries en USING (cluster) JOIN gmap g USING (cluster)")},
        |walked_topk AS (
        |  SELECT n_probe, probe_id, vec_id FROM (
        |    SELECT v.n_probe, h.probe_id, -h.nid AS vec_id,
@@ -1103,13 +1124,7 @@ object VectorQueries {
        |    JOIN ranked r ON r.crk <= v.n_probe
        |    JOIN hits h ON h.probe_id = r.probe_id AND h.cluster = r.cluster)
        |  WHERE rk <= $RecallK),
-       |assigned AS (
-       |  SELECT vec_id, e, cluster FROM (
-       |    SELECT a.vec_id, a.e, c.cluster,
-       |           row_number() OVER (PARTITION BY a.vec_id
-       |             ORDER BY ${sqDist("a.e", "c.centroid")}, c.cluster) AS ark
-       |    FROM emb a CROSS JOIN cents c)
-       |  WHERE ark = 1),
+       |${assignCteOver("emb", "assigned")},
        |scanned_topk AS (
        |  SELECT n_probe, probe_id, vec_id FROM (
        |    SELECT v.n_probe, r.probe_id, a.vec_id,
@@ -1119,13 +1134,7 @@ object VectorQueries {
        |    JOIN ranked r ON r.crk <= v.n_probe
        |    JOIN assigned a ON a.cluster = r.cluster)
        |  WHERE rk <= $RecallK),
-       |exact AS (
-       |  SELECT probe_id, vec_id FROM (
-       |    SELECT p.probe_id, a.vec_id,
-       |           row_number() OVER (PARTITION BY p.probe_id
-       |             ORDER BY round(${cosineSimilaritySql("a.e", "p.pv")}, 6) + 0.0 DESC, a.vec_id) AS rk
-       |    FROM emb a CROSS JOIN probes p)
-       |  WHERE rk <= $RecallK),
+       |$exactCte,
        |he AS (
        |  SELECT n_probe, probe_id, CAST(count(*) AS BIGINT) AS h_exact
        |  FROM walked_topk JOIN exact USING (probe_id, vec_id)
@@ -1145,41 +1154,24 @@ object VectorQueries {
        |CROSS JOIN (SELECT vec_id AS probe_id FROM emb WHERE vec_id < $RecallProbes) p
        |LEFT JOIN he ON he.n_probe = v.n_probe AND he.probe_id = p.probe_id
        |LEFT JOIN hs ON hs.n_probe = v.n_probe AND hs.probe_id = p.probe_id""".stripMargin
-  }
 
   /** q_ann_recall_hnsw twin (r15): the descent over the layers export as
     * a recursive CTE — state (layer, cur, curc) per (probe, list); one
     * step = argmax neighbour by (cos desc, id asc) at the current layer
-    * (the proven list_sort-struct idiom), move only on a STRICT cosine
-    * improvement, else drop a layer; rows stop recursing at layer 0 —
-    * feeding the descended entries into the UNCHANGED bounded-walk CTE
-    * of [[nswRecallSql]]. Both cosines are the AnnNsw form
-    * (dot / sqrt(na·nb)); the exact leg uses the o56 form, as in the
-    * NSW twin. Layer membership is nested by construction, so `cur` is
-    * always a key of every layer below it.
+    * (the list_sort-struct idiom of the walk), move only on a STRICT
+    * cosine improvement, else drop a layer; rows stop recursing at
+    * layer 0 — feeding the descended entries into [[walkCtes]]. The
+    * descent cosine is [[cosineGuardedSql]], as the walk's; the exact
+    * leg uses the o56 form, as in the NSW twin. Layer membership is
+    * nested by construction, so `cur` is always a key of every layer
+    * below it.
     */
-  private def hnswRecallSql: String = {
-    val EF = 32
-    val dotS = (a: String, b: String) =>
-      s"list_sum(list_transform(generate_series(1, len($a)), i -> $a[i]*$b[i]))"
-    val cosNsw = (a: String, b: String) =>
-      s"(CASE WHEN ${dotS(a, a)} = 0 OR ${dotS(b, b)} = 0 THEN 0.0 " +
-        s"ELSE ${dotS(a, b)} / sqrt(${dotS(a, a)} * ${dotS(b, b)}) END)"
-    s"""WITH RECURSIVE
-       |cents AS (SELECT cluster, centroid FROM '$ivfExportPath/*.parquet'),
-       |emb AS (SELECT vec_id, e FROM $embSql),
-       |probes AS (SELECT vec_id AS probe_id, e AS pv FROM emb WHERE vec_id < $HnswProbes),
-       |ranked AS (
-       |  SELECT p.probe_id, p.pv, c.cluster,
-       |         row_number() OVER (PARTITION BY p.probe_id
-       |           ORDER BY ${l2DistanceSql("p.pv", "c.centroid")}, c.cluster) AS crk
-       |  FROM probes p CROSS JOIN cents c),
+  private def hnswRecallSql: String =
+    s"""${graphRecallPrelude(HnswProbes)}
        |np AS (SELECT CAST(greatest(1, count(*) // 4) AS BIGINT) AS n_probe FROM cents),
        |graph AS (SELECT cluster, vec_id, e, nbrs FROM '$nswExportPath/*.parquet'),
        |layers AS (SELECT cluster, layer, vec_id, nbrs FROM '$hnswExportPath/*.parquet'),
-       |gmap AS (
-       |  SELECT cluster, map(list(vec_id), list(struct_pack(e := e, nbrs := nbrs))) AS gm
-       |  FROM graph GROUP BY cluster),
+       |$gmapCte,
        |lmap AS (
        |  SELECT cluster, layer, map(list(vec_id), list(nbrs)) AS lm
        |  FROM layers GROUP BY cluster, layer),
@@ -1197,7 +1189,7 @@ object VectorQueries {
        |  SELECT p.probe_id, p.cluster, p.pv,
        |         CAST(coalesce(t.top_layer, 0) AS BIGINT) AS layer,
        |         coalesce(t.tentry, en.entry) AS cur,
-       |         ${cosNsw("g.gm[coalesce(t.tentry, en.entry)][1].e", "p.pv")} AS curc
+       |         ${cosineGuardedSql("g.gm[coalesce(t.tentry, en.entry)][1].e", "p.pv")} AS curc
        |  FROM pairs p
        |  JOIN entries en USING (cluster)
        |  LEFT JOIN tops t USING (cluster)
@@ -1213,7 +1205,7 @@ object VectorQueries {
        |    FROM (
        |      SELECT d.probe_id, d.cluster, d.pv, d.layer, d.cur, d.curc,
        |             list_sort(list_transform(l.lm[d.cur][1],
-       |               x -> struct_pack(c := ${cosNsw("g.gm[x][1].e", "d.pv")}, nid := -x)),
+       |               x -> struct_pack(c := ${cosineGuardedSql("g.gm[x][1].e", "d.pv")}, nid := -x)),
        |               'DESC')[1] AS best
        |      FROM descent d
        |      JOIN lmap l ON l.cluster = d.cluster AND l.layer = d.layer
@@ -1221,38 +1213,7 @@ object VectorQueries {
        |      WHERE d.layer >= 1))),
        |fentries AS (
        |  SELECT probe_id, cluster, pv, cur AS entry FROM descent WHERE layer = 0),
-       |walk AS (
-       |  SELECT f.probe_id, f.cluster, f.pv,
-       |         [f.entry] AS visited,
-       |         [struct_pack(c := ${cosNsw("g.gm[f.entry][1].e", "f.pv")}, nid := -f.entry)] AS frontier,
-       |         [struct_pack(c := ${cosNsw("g.gm[f.entry][1].e", "f.pv")}, nid := -f.entry)] AS results,
-       |         false AS done
-       |  FROM fentries f JOIN gmap g USING (cluster)
-       |  UNION ALL
-       |  SELECT probe_id, cluster, pv,
-       |         CASE WHEN stop THEN visited ELSE visited || unvis END AS visited,
-       |         CASE WHEN stop THEN frontier_rest ELSE frontier_rest || news END AS frontier,
-       |         CASE WHEN stop THEN results ELSE list_sort(results || news, 'DESC')[1:$EF] END AS results,
-       |         stop AS done
-       |  FROM (
-       |    SELECT probe_id, cluster, pv, visited, frontier_rest, results, stop,
-       |           CASE WHEN stop THEN [] ELSE list_filter(gm[-best.nid][1].nbrs,
-       |             x -> NOT list_contains(visited, x)) END AS unvis,
-       |           CASE WHEN stop THEN [] ELSE list_transform(
-       |             list_filter(gm[-best.nid][1].nbrs, x -> NOT list_contains(visited, x)),
-       |             x -> struct_pack(c := ${cosNsw("gm[x][1].e", "pv")}, nid := -x)) END AS news
-       |    FROM (
-       |      SELECT w.probe_id, w.cluster, w.pv, w.visited, w.results, g.gm,
-       |             list_sort(w.frontier, 'DESC')[1] AS best,
-       |             list_sort(w.frontier, 'DESC')[2:] AS frontier_rest,
-       |             len(w.frontier) = 0 OR (len(w.results) >= $EF AND
-       |               list_sort(w.frontier, 'DESC')[1].c <
-       |                 list_min(list_transform(w.results, r -> r.c))) AS stop
-       |      FROM walk w JOIN gmap g USING (cluster)
-       |      WHERE NOT w.done))),
-       |hits AS (
-       |  SELECT probe_id, cluster, unnest(results, recursive := true)
-       |  FROM walk WHERE done),
+       |${walkCtes("f", "f.entry", "fentries f JOIN gmap g USING (cluster)")},
        |walked_topk AS (
        |  SELECT probe_id, vec_id FROM (
        |    SELECT h.probe_id, -h.nid AS vec_id,
@@ -1260,13 +1221,7 @@ object VectorQueries {
        |             ORDER BY round(h.c, 6) + 0.0 DESC, -h.nid) AS rk
        |    FROM hits h)
        |  WHERE rk <= $RecallK),
-       |exact AS (
-       |  SELECT probe_id, vec_id FROM (
-       |    SELECT p.probe_id, a.vec_id,
-       |           row_number() OVER (PARTITION BY p.probe_id
-       |             ORDER BY round(${cosineSimilaritySql("a.e", "p.pv")}, 6) + 0.0 DESC, a.vec_id) AS rk
-       |    FROM emb a CROSS JOIN probes p)
-       |  WHERE rk <= $RecallK),
+       |$exactCte,
        |he AS (
        |  SELECT probe_id, CAST(count(*) AS BIGINT) AS h
        |  FROM walked_topk JOIN exact USING (probe_id, vec_id)
@@ -1275,7 +1230,6 @@ object VectorQueries {
        |       CAST(coalesce(he.h, 0) AS BIGINT) AS n_hits,
        |       CAST((coalesce(he.h, 0) * 10000) // $RecallK AS BIGINT) AS recall_bp
        |FROM probes p LEFT JOIN he USING (probe_id)""".stripMargin
-  }
 
   val oracle: Map[String, String] = Map(
     "q_ann_recall_hnsw" -> hnswRecallSql,
@@ -1412,17 +1366,9 @@ object VectorQueries {
     // Same centroid-export replay as q_ann_ivf with self excluded
     // before ranking, plus the integer vote layer.
     "q_knn_eval" -> {
-      val sqDist = (a: String, b: String) =>
-        s"list_sum(list_transform(generate_series(1, len($a)), i -> ($a[i]-$b[i])*($a[i]-$b[i])))"
       s"""WITH cents AS (SELECT cluster, centroid FROM '$ivfExportPath/*.parquet'),
          |emb AS (SELECT vec_id, label, e FROM $embSql),
-         |assigned AS (
-         |  SELECT vec_id, e, cluster FROM (
-         |    SELECT a.vec_id, a.e, c.cluster,
-         |           row_number() OVER (PARTITION BY a.vec_id
-         |             ORDER BY ${sqDist("a.e", "c.centroid")}, c.cluster) AS ark
-         |    FROM emb a CROSS JOIN cents c)
-         |  WHERE ark = 1),
+         |${assignCteOver("emb", "assigned")},
          |probes AS (SELECT vec_id AS probe_id, CAST(label AS BIGINT) AS truth, e AS pv
          |           FROM emb WHERE vec_id % $KnnProbeMod = 0),
          |plists AS (
@@ -1456,17 +1402,9 @@ object VectorQueries {
     // variants×ranked join), hits counted against the exact top-10 —
     // the recall METRIC is the hash-compared result.
     "q_ann_recall_ivf" -> {
-      val sqDist = (a: String, b: String) =>
-        s"list_sum(list_transform(generate_series(1, len($a)), i -> ($a[i]-$b[i])*($a[i]-$b[i])))"
       s"""WITH cents AS (SELECT cluster, centroid FROM '$ivfExportPath/*.parquet'),
          |emb AS (SELECT vec_id, e FROM $embSql),
-         |assigned AS (
-         |  SELECT vec_id, e, cluster FROM (
-         |    SELECT a.vec_id, a.e, c.cluster,
-         |           row_number() OVER (PARTITION BY a.vec_id
-         |             ORDER BY ${sqDist("a.e", "c.centroid")}, c.cluster) AS ark
-         |    FROM emb a CROSS JOIN cents c)
-         |  WHERE ark = 1),
+         |${assignCteOver("emb", "assigned")},
          |probes AS (SELECT vec_id AS probe_id, e AS pv FROM emb WHERE vec_id < $RecallProbes),
          |ranked AS (
          |  SELECT p.probe_id, p.pv, c.cluster,
@@ -1486,13 +1424,7 @@ object VectorQueries {
          |    JOIN ranked r ON r.crk <= v.n_probe
          |    JOIN assigned a ON a.cluster = r.cluster)
          |  WHERE rk <= $RecallK),
-         |exact AS (
-         |  SELECT probe_id, vec_id FROM (
-         |    SELECT p.probe_id, a.vec_id,
-         |           row_number() OVER (PARTITION BY p.probe_id
-         |             ORDER BY round(${cosineSimilaritySql("a.e", "p.pv")}, 6) + 0.0 DESC, a.vec_id) AS rk
-         |    FROM emb a CROSS JOIN probes p)
-         |  WHERE rk <= $RecallK)
+         |$exactCte
          |SELECT n_probe, probe_id, CAST(count(*) AS BIGINT) AS n_hits,
          |       CAST((count(*) * 10000) // $RecallK AS BIGINT) AS recall_bp
          |FROM topk JOIN exact USING (probe_id, vec_id)

@@ -2,7 +2,7 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-import graft.operators.{AnnIvf, AnnNsw}
+import graft.operators.{AnnGraph, AnnIvf}
 
 /** Graph-navigable ANN (VERDICT r7 "missing" #3 — the reference's HNSW
   * declaration): per-IVF-list navigable-small-world graphs + greedy
@@ -25,7 +25,7 @@ class AnnNswSpec extends SparkSpec {
 
   private lazy val emb = axisEmb(200)
   private lazy val ivf = AnnIvf.buildIndex(emb, "vec_id", "embedding", nList = 4)
-  private lazy val nsw = AnnNsw.buildGraph(ivf, m = 6)
+  private lazy val nsw = AnnGraph.buildGraph(ivf, m = 6)
   private lazy val probes = emb.filter(col("vec_id") < 4)
     .select(col("vec_id").as("pid"), col("embedding"))
 
@@ -34,7 +34,7 @@ class AnnNswSpec extends SparkSpec {
     // so scoring + tie-break must equal AnnIvf's scan of the same lists
     val scan = AnnIvf.topK(ivf, probes, "pid", "embedding", k = 5, nProbe = 1)
       .select("probe_id", "vec_id", "rk").collect().map(_.toSeq).toSet
-    val walk = AnnNsw.topK(nsw, probes, "pid", "embedding", k = 5,
+    val walk = AnnGraph.topK(nsw, probes, "pid", "embedding", k = 5,
       nProbe = 1, efSearch = 128)
       .select("probe_id", "vec_id", "rk").collect().map(_.toSeq).toSet
     assert(walk == scan)
@@ -43,7 +43,7 @@ class AnnNswSpec extends SparkSpec {
   test("bounded walk keeps recall while touching a fraction of the list") {
     val exact = AnnIvf.topK(ivf, probes, "pid", "embedding", k = 5, nProbe = 1)
       .select("probe_id", "vec_id").collect().map(_.toSeq).toSet
-    val walk = AnnNsw.topK(nsw, probes, "pid", "embedding", k = 5,
+    val walk = AnnGraph.topK(nsw, probes, "pid", "embedding", k = 5,
       nProbe = 1, efSearch = 12)
       .select("probe_id", "vec_id").collect().map(_.toSeq).toSet
     val recall = walk.intersect(exact).size.toDouble / exact.size
@@ -62,18 +62,60 @@ class AnnNswSpec extends SparkSpec {
   }
 
   test("build and search are deterministic across partitionings") {
-    val a = AnnNsw.topK(nsw, probes, "pid", "embedding", k = 5,
+    val a = AnnGraph.topK(nsw, probes, "pid", "embedding", k = 5,
       nProbe = 2, efSearch = 16).collect().map(_.toSeq).toSet
-    val nsw2 = AnnNsw.buildGraph(
+    val nsw2 = AnnGraph.buildGraph(
       AnnIvf.IvfIndex(ivf.assigned.repartition(7), ivf.centroids, ivf.idCol), m = 6)
-    val b = AnnNsw.topK(nsw2, probes.repartition(3), "pid", "embedding", k = 5,
+    val b = AnnGraph.topK(nsw2, probes.repartition(3), "pid", "embedding", k = 5,
       nProbe = 2, efSearch = 16).collect().map(_.toSeq).toSet
     assert(a == b)
   }
 
+  /** The flat NSW search the layered [[AnnGraph.topK]] replaced: entry =
+    * each list's min vec_id, then the same bounded walk.
+    */
+  private def flatNswTopK(ix: AnnGraph.GraphIndex, k: Int, nProbe: Int,
+      efSearch: Int) = {
+    val routed = AnnIvf.route(probes
+        .select(col("pid").cast("long").as("probe_id"),
+          graft.functions.VectorOps.toDoubleArr(col("embedding")).as("pv")),
+        ix.centroids, nProbe)
+      .select(col("cluster").cast("int"), col("probe_id"), col("pv"))
+      .as[AnnGraph.ProbeRow]
+    val hits = ix.graph.as[AnnGraph.GraphRow].groupByKey(_.cluster)
+      .cogroup(routed.groupByKey(_.cluster)) {
+        (_: Int, gIt: Iterator[AnnGraph.GraphRow], pIt: Iterator[AnnGraph.ProbeRow]) =>
+        val ps = pIt.toSeq
+        if (ps.isEmpty) Iterator.empty
+        else {
+          val rows = gIt.toArray
+          val byId = rows.map(r => r.vec_id -> r).toMap
+          val entry = if (rows.isEmpty) -1L else rows.iterator.map(_.vec_id).min
+          ps.iterator.flatMap { p =>
+            if (entry < 0) Iterator.empty
+            else AnnGraph.walkList(byId, entry, p.pv.toIndexedSeq, efSearch)
+              .map((t: (Double, Long)) => AnnGraph.Hit(p.probe_id, t._2, t._1))
+          }
+        }
+      }
+    AnnIvf.cosTopK(hits.toDF(), Seq("probe_id"), "vec_id", col("cos"), k)
+      .withColumn("rk", col("rk").cast("long"))
+  }
+
+  test("the layered search over an index with no upper layers is the flat NSW search") {
+    assert(nsw.layers.isEmpty)
+    for (ef <- Seq(12, 16, 128); nProbe <- Seq(1, 2)) {
+      val one = AnnGraph.topK(nsw, probes, "pid", "embedding", k = 5,
+        nProbe = nProbe, efSearch = ef).collect().map(_.toSeq).toSet
+      val flat = flatNswTopK(nsw, k = 5, nProbe = nProbe, efSearch = ef)
+        .collect().map(_.toSeq).toSet
+      assert(one.nonEmpty && one == flat, s"efSearch=$ef nProbe=$nProbe")
+    }
+  }
+
   // ---- HNSW layer hierarchy over the same base (r15) ----
 
-  private lazy val hnsw = graft.operators.AnnHnsw.buildLayers(nsw, m = 6, maxLayer = 3)
+  private lazy val hnsw = AnnGraph.buildLayers(nsw, m = 6, maxLayer = 3)
 
   test("hnsw layers: geometric population, nested membership, bounded degree") {
     val rows = hnsw.layers.select("cluster", "layer", "vec_id", "nbrs").collect()
@@ -83,7 +125,7 @@ class AnnNswSpec extends SparkSpec {
     // levels are geometric(1/4): layer 1 holds a strict subset, and the
     // exact rule is pinned against levelOf
     rows.foreach { r =>
-      assert(graft.operators.AnnHnsw.levelOf(r.getLong(2), 3) >= r.getInt(1))
+      assert(AnnGraph.levelOf(r.getLong(2), 3) >= r.getInt(1))
       assert(r.getSeq[Long](3).size <= 12, "degree > 2m in an upper layer")
     }
     // nested: every layer-l node is a layer-(l-1) node (and a base node)
@@ -105,7 +147,7 @@ class AnnNswSpec extends SparkSpec {
     // which entry the hierarchy chose
     val scan = AnnIvf.topK(ivf, probes, "pid", "embedding", k = 5, nProbe = 1)
       .select("probe_id", "vec_id", "rk").collect().map(_.toSeq).toSet
-    val walk = graft.operators.AnnHnsw.topK(hnsw, probes, "pid", "embedding",
+    val walk = AnnGraph.topK(hnsw, probes, "pid", "embedding",
       k = 5, nProbe = 1, efSearch = 128)
       .select("probe_id", "vec_id", "rk").collect().map(_.toSeq).toSet
     assert(walk == scan)
@@ -114,13 +156,12 @@ class AnnNswSpec extends SparkSpec {
   test("hnsw bounded walk keeps recall; build is deterministic") {
     val exact = AnnIvf.topK(ivf, probes, "pid", "embedding", k = 5, nProbe = 1)
       .select("probe_id", "vec_id").collect().map(_.toSeq).toSet
-    val walk = graft.operators.AnnHnsw.topK(hnsw, probes, "pid", "embedding",
+    val walk = AnnGraph.topK(hnsw, probes, "pid", "embedding",
       k = 5, nProbe = 1, efSearch = 12)
       .select("probe_id", "vec_id").collect().map(_.toSeq).toSet
     val recall = walk.intersect(exact).size.toDouble / exact.size
     assert(recall >= 0.9, s"hnsw bounded-walk recall $recall")
-    val hnsw2 = graft.operators.AnnHnsw.buildLayers(
-      AnnNsw.NswIndex(nsw.graph.repartition(5), nsw.centroids, nsw.idCol),
+    val hnsw2 = AnnGraph.buildLayers(nsw.copy(graph = nsw.graph.repartition(5)),
       m = 6, maxLayer = 3)
     val a = hnsw.layers.collect().map(_.toSeq).toSet
     val b = hnsw2.layers.collect().map(_.toSeq).toSet

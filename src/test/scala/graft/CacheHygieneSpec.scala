@@ -128,6 +128,25 @@ class CacheHygieneSpec extends SparkSpec {
     assert(Stats.scalar(spark, sf, "hygiene:probe")(fail("Stats memo was cleared")) === 42L)
   }
 
+  test("a shared statistic is computed once, whichever reader runs first") {
+    // a fresh data dir, so no earlier test has filled its Stats entries
+    val dir = java.nio.file.Files.createTempDirectory("graft-stats")
+    val docs = dir.resolve("documents.parquet")
+    java.nio.file.Files.copy(java.nio.file.Paths.get(sf, "documents.parquet"), docs)
+    try {
+      val d = dir.toString
+      // q_corpus_shuffle reads the document count while it plans
+      SparkEntry.queries("q_corpus_shuffle")(spark, d)
+      val (bound, cost) = Ledger.measure(spark)(
+        queries.GraphAnalyticsQueries.lpaNodesUpperBound(spark, d))
+      assert(cost.jobs === 0, "the LPA bound counted the corpus again")
+      assert(bound === 2L * Tables.documents(spark, d).count())
+    } finally {
+      java.nio.file.Files.delete(docs)
+      java.nio.file.Files.delete(dir)
+    }
+  }
+
   test("session-stop eviction: no memo cache entry survives the session") {
     // VERDICT r6 "what's wrong" #3: caches key on the session UUID and a
     // context listener evicts on stop. The suites share one context, so
