@@ -1,5 +1,8 @@
 package graft.operators.clustering
 
+import java.lang.ref.WeakReference
+import java.util.concurrent.atomic.AtomicReference
+
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -187,6 +190,9 @@ object GraphBuild {
     val assignDF = assign.toSeq.toDF("cluster", "graph_id")
     val movies = labels.join(broadcast(assignDF), Seq("cluster"))
       .select(col(idCol).as("movie_id"), col("graph_id"))
+    // the tree a build returns is the one its readers serve next: index
+    // it from the rows already on the driver, with no query
+    slot(graph).set(new NodeIndex(graph, rows.map(r => (r.id, r.path, r.depth))))
     GraphTables(graph, movies, labels, Seq(input, scaled), stats, centers,
       TreeOps.preorder(preTree))
   }
@@ -194,10 +200,10 @@ object GraphBuild {
   /** E2 serving (graph_repo.py:92-135): immediate children of a node via
     * the ltree `path ~ 'p.*{1}'` equivalent — prefix + depth predicates.
     *
-    * Runs ONE job to read the parent row (a `collect` of the id point
-    * filter; none over an in-memory tree such as a build's). The children
-    * are then one filter carrying the parent's path and depth as
-    * literals: a depth-partitioned table prunes its scan to the
+    * The parent's path and depth come from the session's [[nodeIndex]]
+    * of `graph`: once `graph` is indexed, a call runs no job for the
+    * parent. The children are one filter carrying the parent's path and
+    * depth as literals: a depth-partitioned table prunes its scan to the
     * `depth = parent + 1` directory, and an in-memory tree plans to a
     * `LocalTableScan`, which collects on the driver with no job.
     *
@@ -210,10 +216,51 @@ object GraphBuild {
     */
   def childrenOf(graph: DataFrame, nodeId: Long): DataFrame = {
     val out = Seq("id", "path", "name", "type", "children_count", "count").map(col)
-    graph.filter(col("id") === nodeId).select("path", "depth").collect()
-      .map(p => graph.filter(isChildOf(p.get(0), p.get(1))).select(out: _*))
+    nodeIndex(graph).parents.getOrElse(nodeId, Nil)
+      .map { case (path, depth) => graph.filter(isChildOf(path, depth)).select(out: _*) }
       .reduceOption(_ union _)
       .getOrElse(graph.filter(lit(false)).select(out: _*))
+  }
+
+  /** The parent rows of one graph: id → every `(path, depth)` row with
+    * that id, in row order, NULL paths and depths kept. `of` holds the
+    * graph weakly, by reference.
+    */
+  private final class NodeIndex(graph: DataFrame, rows: Seq[(Long, Any, Any)]) {
+    val of = new WeakReference(graph)
+    val parents: Map[Long, Seq[(Any, Any)]] = rows.groupMap(_._1)(r => (r._2, r._3))
+  }
+
+  /** One slot per session: the node index of the last graph asked about. */
+  private val nodeIndexes =
+    graft.SessionCache.artifact[AtomicReference[NodeIndex]]("graph_node_index")(_ => ())
+
+  private def slot(graph: DataFrame): AtomicReference[NodeIndex] =
+    nodeIndexes.getOrElseUpdate(graph.sparkSession, "")(new AtomicReference[NodeIndex])
+
+  /** The session's node index of `graph`. Unless the slot already holds
+    * this very DataFrame's, one `collect` of its `(id, path, depth)` rows
+    * rebuilds it (no job over an in-memory tree); [[build]] fills it
+    * with the tree it returns.
+    *
+    * It has one entry per graph row, so it is bounded by the tree:
+    * ≤ 2·maxMicro − 1 rows (1,599 at the 800 cap). The slot remembers
+    * its graph by reference, weakly: any other DataFrame rebuilds the
+    * index, so two graphs never share one and a session holds one tree
+    * however many frames a caller makes. A file-backed graph's index is
+    * as fresh as that frame's own file listing. A plan hash or an
+    * `identityHashCode` key could collide (see [[graft.SessionCache]]).
+    */
+  private def nodeIndex(graph: DataFrame): NodeIndex = {
+    val s = slot(graph)
+    Option(s.get).filter(_.of.get eq graph).getOrElse {
+      // integral ids: the cast keeps `id = nodeId`'s matches
+      val rows = graph.select(col("id").cast("long"), col("path"), col("depth")).collect()
+        .filterNot(_.isNullAt(0)).map(r => (r.getLong(0), r.get(1), r.get(2)))
+      val ix = new NodeIndex(graph, rows.toSeq)
+      s.set(ix)
+      ix
+    }
   }
 
   /** The ltree `path ~ 'parent.*{1}'` rule as literals: a row is an

@@ -374,6 +374,44 @@ class ClusteringSpec extends SparkSpec {
     assert(cost.jobs == 0, s"childrenOf ran ${cost.jobs} jobs over a LocalRelation")
   }
 
+  test("childrenOf over a depth-partitioned parquet graph reads the parent rows once") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-children").resolve("g").toString
+    SparkEntry.queries("o07_graph_ids")(spark, "/root/testdata/sf0.001")
+      .withColumn("count", lit(0L)).write.partitionBy("depth").parquet(dir)
+    val g = spark.read.parquet(dir)
+    val ids = g.select("id").as[Long].collect().sorted
+    assert(ids.length > 5)
+    ids.zipWithIndex.foreach { case (id, i) =>
+      val (kids, plan) = Ledger.measure(spark)(GraphBuild.childrenOf(g, id))
+      // the first call builds the node index in one job
+      assert(plan.jobs == (if (i == 0) 1 else 0), s"childrenOf($id) ran ${plan.jobs} jobs")
+      val (_, run) = Ledger.measure(spark)(kids.collect())
+      assert(run.jobs == 1, s"children of $id collected in ${run.jobs} jobs")
+      assertSameChildren(g, id)
+    }
+  }
+
+  test("childrenOf keeps two graphs with the same ids and schema apart") {
+    def graph(paths: String*): DataFrame =
+      paths.zipWithIndex.map { case (p, i) => (i + 1L, p, p.count(_ == '.')) }
+        .toDF("id", "path", "depth")
+        .select(col("id"), col("path"), lit("n").as("name"), lit("node").as("type"),
+          lit(0).as("children_count"), col("depth"), lit(0L).as("count"))
+    val a = graph("r", "r.2", "x.3")
+    val b = graph("x", "r.2", "x.3")
+    for (_ <- 1 to 3; (g, want) <- Seq(a -> Seq(2L), b -> Seq(3L)))
+      assert(GraphBuild.childrenOf(g, 1L).collect().map(_.getAs[Long]("id")).toSeq == want)
+  }
+
+  test("clearCaches drops the node index") {
+    val ix = SessionCache.ofLifetime(SessionCache.Artifact)
+      .find(_.name == "graph_node_index").get
+    GraphBuild.childrenOf(blobTree(), 1L)
+    assert(ix.activeCount(spark) == 1)
+    SparkEntry.clearCaches()
+    assert(ix.activeCount(spark) == 0)
+  }
+
   test("route sends equidistant lists to the lower cluster id first; cosTopK ties on id") {
     // probe at the origin: clusters 3 and 1 are both at distance 1,
     // cluster 0 at distance 5; the rows arrive in descending id order
